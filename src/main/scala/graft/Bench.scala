@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query wall
@@ -11,58 +10,17 @@ import org.apache.spark.sql.SparkSession
   * written to bench_out.json as a belt-and-braces parse path.
   */
 object Bench {
+  def cpus: Int = Harness.cpus(32)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Shuffle scratch on the fastest local medium (RAM-backed tmpfs
-    // when available) — see graft.util.LocalScratch: the sandbox's
-    // ext4 serializes the metadata-heavy small-shuffle file traffic
-    // and was the dominant non-compute wall of the composite queries
-    // (r21 task sampling + A/B in OPTIMIZATION_r21.md). Overridable
-    // via GRAFT_LOCAL_DIR / SPARK_LOCAL_DIRS.
-    val spark = graft.util.LocalScratch.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Codegen class cache sized for this suite's plan volume. The
-      // default 100 entries thrash INSIDE one composite query (the
-      // incremental media report alone carries hundreds of distinct
-      // codegen units): task-thread sampling showed executor threads
-      // serialized on CodeGenerator.compile, and one probed rep hit
-      // 43 s re-compiling units the same query had already compiled.
-      // 10000 entries measured 14.7 → 8.5 s warm on that query (r21,
-      // OPTIMIZATION_r21.md). Compiled-class caching is JVM-level —
-      // the same lever applies to long-lived executors at any scale.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("GRAFT_CODEGEN_CACHE", "5000"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.GraftFunctions.register(spark)
-    // JVM warm-up OUTSIDE every timer: Janino/codegen initialization,
-    // the noop-datasource lookup, and shuffle machinery are one-time
-    // JVM costs that otherwise land entirely on the alphabetically
-    // first query (measured at sf0.1: cdc_decode_events 3.4 s as the
-    // first query vs 0.4 s for the SAME decode pipeline once warm —
-    // the 2.9 s gap was never the query). A tiny aggregate exercises
-    // all three paths; failures are ignored (the warm-up must never
-    // fail the bench).
-    try {
-      import org.apache.spark.sql.functions.{col, pmod}
-      spark.range(0, 100000).toDF("i")
-        .repartition(4)
-        .groupBy(pmod(col("i"), org.apache.spark.sql.functions.lit(7)).as("k"))
-        .count()
-        .write.mode("overwrite").format("noop").save()
-    } catch { case _: Throwable => () }
+    val spark = Harness.session(cpus)
+    Harness.warmUp(spark)
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     // Optional args = query-name substrings to run (iteration aid:
     // `runMain graft.Bench p_ngram` times one query family). The
     // driver passes no args → full suite, unchanged.
-    val selected =
-      if (args.isEmpty) SparkEntry.queries
-      else SparkEntry.queries.filter { case (n, _) => args.exists(n.contains) }
-    val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
+    val results = Harness.select(args.toSeq).map { case (name, fn) =>
       val t0 = System.nanoTime()
       val ok =
         try { fn(spark, sfDir).write.mode("overwrite").format("noop").save(); true }
@@ -72,25 +30,10 @@ object Bench {
         }
       val elapsed = (System.nanoTime() - t0) / 1e9
       System.err.println(f"[bench] $name%-32s ${elapsed}%8.2f s")
-      // Isolate queries from each other — all OUTSIDE the timers:
-      // clearCache() initiates block removal asynchronously, so a
-      // query's GC/eviction debt would otherwise land on the NEXT
-      // timer (measured: a 3.5 s query attributed 100+ s). Unpersist
-      // blocking, then force a full GC so each timer starts from a
-      // quiet heap. (The library operators no longer persist anything
-      // — this is belt-and-braces for future queries that might.)
-      val cached = spark.sparkContext.getPersistentRDDs.values
-      spark.catalog.clearCache()
-      cached.foreach(_.unpersist(blocking = true))
-      System.gc()
+      Harness.sweep(spark)
       name -> (if (ok) elapsed else -1.0)
     }
-    def q(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
+    val q = Harness.json _
     val es = errors.map { case (k, v) => s"${q(k)}:${q(v)}" }.mkString("{", ",", "}")
     val total = results.collect { case (_, v) if v >= 0 => v }.sum
     // The stdout line must stay SHORT: the driver captures only the

@@ -1,7 +1,6 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, Graph, Similarity}
@@ -34,30 +33,6 @@ import graft.operators.{Dedup, Graph, Similarity}
   * rows, task count, max/median task ms — sub-quadratic growth and
   * bounded skew are the pass criteria, recorded in BASELINE.md. */
 object ScaleStress {
-
-  /** Records (stageId, duration) per successful task: the op-level
-    * max/med ratio alone cannot distinguish a genuine straggler (one
-    * task of a stage far beyond its siblings — a skew defect) from a
-    * uniformly WIDE stage (every task equally heavy — a volume cost,
-    * fixed by parallelism not by skew handling), so `measure` also
-    * reports the max task's own stage-internal median. */
-  private final class TaskStats extends SparkListener {
-    private val durations = new java.util.concurrent.ConcurrentLinkedQueue[(Int, java.lang.Long)]()
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-      if (t.taskInfo != null && t.taskInfo.successful)
-        durations.add((t.stageId, t.taskInfo.duration))
-    // job COUNT (not timing): the BPE scan-batching claim is "jobs ≈
-    // merges/maxPerScan + constant" — a scheduler fact, so it is
-    // counted at the scheduler, not inferred from wall time
-    private val jobCount = new java.util.concurrent.atomic.AtomicInteger(0)
-    override def onJobStart(j: SparkListenerJobStart): Unit = { jobCount.incrementAndGet(); () }
-    def jobs: Int = jobCount.get
-    def size: Int = durations.size
-    def slice(from: Int): Seq[(Int, Long)] = {
-      import scala.jdk.CollectionConverters._
-      durations.asScala.toSeq.map { case (s, d) => (s, d.longValue) }.drop(from)
-    }
-  }
 
   def amplifyDocs(docs: DataFrame, scale: Int): DataFrame =
     if (scale <= 1) docs.select("doc_id", "text")
@@ -115,7 +90,7 @@ object ScaleStress {
     val numeric = args.filter(_.forall(_.isDigit))
     val opFilter = args.filterNot(_.forall(_.isDigit)).toSeq
     val scales = if (numeric.nonEmpty) numeric.map(_.toInt).toSeq else Seq(1, 10, 50)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Harness.cpus(32)
     // GRAFT_MEM_FRACTION: spark.memory.fraction is STATIC (read at
     // SparkEnv init — spark.conf.set is too late), so the earlier-
     // spill lever for heap-tight arms rides an env var. Default 0.6
@@ -139,28 +114,23 @@ object ScaleStress {
     //    free space, so it also adapts to a fuller disk.
     val maxScale = scales.max
     val derivedParts =
-      (cpus.toInt * math.min(32, math.max(1, math.ceil(maxScale / 125.0).toInt))).toString
+      (cpus * math.min(32, math.max(1, math.ceil(maxScale / 125.0).toInt))).toString
     val estScratchGb = 0.1 * maxScale
     val usableGb = new java.io.File(sys.props("java.io.tmpdir")).getUsableSpace / 1e9
     val derivedCodec = if (estScratchGb > 0.4 * usableGb) "zstd" else "lz4"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scale-stress")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("GRAFT_SHUFFLE_PARTITIONS", derivedParts))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.memory.fraction", sys.env.getOrElse("GRAFT_MEM_FRACTION", "0.6"))
-      .config("spark.io.compression.codec",
-        sys.env.getOrElse("GRAFT_IO_CODEC", derivedCodec))
-      .getOrCreate()
-    System.err.println(
-      s"[stress] maxScale=$maxScale shuffle.partitions=${sys.env.getOrElse("GRAFT_SHUFFLE_PARTITIONS", derivedParts)} " +
-        f"codec=${sys.env.getOrElse("GRAFT_IO_CODEC", derivedCodec)} (est scratch $estScratchGb%.0f GB, free ${usableGb.toInt} GB)")
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
-    val stats = new TaskStats
+    val parts = sys.env.getOrElse("GRAFT_SHUFFLE_PARTITIONS", derivedParts)
+    val codec = sys.env.getOrElse("GRAFT_IO_CODEC", derivedCodec)
+    // disk scratch, not LocalScratch's RAM: the 100–500× arms write
+    // multi-GB shuffle scratch
+    val spark = Harness.session(cpus, ramScratch = false, overrides = Seq(
+      "spark.sql.shuffle.partitions" -> parts,
+      "spark.memory.fraction" -> sys.env.getOrElse("GRAFT_MEM_FRACTION", "0.6"),
+      "spark.io.compression.codec" -> codec))
+    System.err.println(s"[stress] maxScale=$maxScale shuffle.partitions=$parts " +
+      f"codec=$codec (est scratch $estScratchGb%.0f GB, free ${usableGb.toInt} GB)")
+    // per-task (stage, ms) for the skew fields; stage lines to stderr
+    // name the straggler or uniformly wide stage of each arm
+    val stats = new Harness.StageListener(System.err.println)
     spark.sparkContext.addSparkListener(stats)
 
     val results = scala.collection.mutable.ArrayBuffer[String]()
@@ -171,15 +141,13 @@ object ScaleStress {
       if (opFilter.isEmpty || opFilter.exists(op.contains)) measureAll(op, scale)(body)
     def measureAll(op: String, scale: Int)(body: => Long): Unit = {
       // drop lingering localCheckpoint blocks so ops don't interfere
-      val cached = spark.sparkContext.getPersistentRDDs.values
-      spark.catalog.clearCache()
-      cached.foreach(_.unpersist(blocking = true))
-      val from = stats.size
+      Harness.sweep(spark)
+      val from = stats.taskCount
       val t0 = System.nanoTime()
       val rows = body
       val sec = (System.nanoTime() - t0) / 1e9
       Thread.sleep(500) // let straggler TaskEnd events drain the bus
-      val staged = stats.slice(from)
+      val staged = stats.tasksSince(from)
       val tasks = staged.map(_._2).sorted
       val (maxMs, medMs) =
         if (tasks.isEmpty) (0L, 0L)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -43,18 +43,8 @@ object StreamScaleStress {
     val numeric = args.filter(_.forall(_.isDigit))
     val opFilter = args.filterNot(_.forall(_.isDigit)).toSeq
     val scales = if (numeric.nonEmpty) numeric.map(_.toInt).toSeq else Seq(10, 50)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-stream-scale-stress")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.streaming.numRecentProgressUpdates", "256")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
+    val spark = Harness.session(Harness.cpus(32),
+      Seq("spark.sql.streaming.numRecentProgressUpdates" -> "256"))
 
     val work = java.nio.file.Files.createTempDirectory("graft-sss").toString
     val results = scala.collection.mutable.ArrayBuffer[String]()

@@ -9,7 +9,7 @@ import org.apache.spark.sql.types.{BooleanType, DataType}
 /** Always-true predicate that Catalyst must treat as NONDETERMINISTIC
   * — a predicate-pushdown barrier.
   *
-  * Why it exists (measured, r12 StageProbe at 50× ScaleStress): the
+  * Why it exists (measured, r12 per-stage probe at 50× ScaleStress): the
   * shingle frontier materializes `sh = sort(hash(shingles(text)))`
   * behind a repartition exchange so (a) the CPU-heavy, interpreted
   * higher-order shingle expressions run ONCE, spread over the

@@ -40,7 +40,7 @@ object Curation {
     // projection, exactGroups' partial agg, the shingle frontier) —
     // one barriered exchange materializes it once and every frontier
     // runs wide above the ReusedExchange instead of re-deriving the
-    // scan lineage serially per branch (StageProbe r16).
+    // scan lineage serially per branch (r16 per-stage probe).
     val spread = Dedup.spreadText(docs, idCol, textCol)
     val quality = TextAnalysis.qualityFilter(spread, idCol, textCol)
       .select(col(idCol), col("n_tokens"),
@@ -227,7 +227,7 @@ object Curation {
       oldReport: DataFrame, oldIndex: DataFrame,
       n: Int, k: Int, rowsPerBand: Int, threshold: Double,
       minAgree: Double, maxBucket: Int = 1024): DataFrame = {
-    // Text share point ([[Dedup.spreadText]], StageProbe-diagnosed
+    // Text share point ([[Dedup.spreadText]], stage-line-diagnosed
     // r16 in two steps): without any exchange the md5(normalize(text))
     // projection fuses into the file scan and runs at input-FILE
     // parallelism — TWO single-task 28 s stages at 100×, one per

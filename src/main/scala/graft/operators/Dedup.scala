@@ -292,7 +292,7 @@ object Dedup {
     * same corpus text from several frontiers; without a shared
     * exchange each branch re-derives the full upstream text lineage
     * at INPUT parallelism (serial on a single-file or computed feed —
-    * StageProbe r16 measured two ~23 s single-task re-derivations
+    * r16 per-stage probe measured two ~23 s single-task re-derivations
     * inside one incrementalReport at 100×), and consumer-side
     * inferred filters diverge the copies so ReuseExchange silently
     * turns off (the [[graft.functions.PushdownBarrier]] lesson).
@@ -384,6 +384,19 @@ object Dedup {
       .select("id_a", "id_b", "jac")
   }
 
+  /** The shared dedup tail: resolve `pairs` (`id_a`, `id_b`) into
+    * clusters with [[Graph.connectedComponents]] and drop every
+    * clustered row of `docs` except its smallest-id representative
+    * (the CC label), in ONE left anti equi-join on `idCol` against
+    * the non-representative ids only — unclustered rows pass through
+    * and the payload never shuffles on the dedup decision. */
+  def dropLosers(docs: DataFrame, idCol: String, pairs: DataFrame): DataFrame = {
+    val losers = Graph.connectedComponents(pairs, "id_a", "id_b")
+      .filter(col("node") =!= col("component"))
+      .select(col("node").as(idCol))
+    docs.join(losers, Seq(idCol), "left_anti")
+  }
+
   /** Near-dup DEDUP output — the curation step the pair/group queries
     * exist to serve: resolve minhash near-dup pairs into clusters
     * ([[graft.operators.Graph.connectedComponents]]) and drop every
@@ -405,10 +418,7 @@ object Dedup {
       maxBucket: Int = 1024): DataFrame = {
     val pairs =
       nearDupPairsShingled(docs, idCol, textCol, n, k, rowsPerBand, threshold, maxBucket)
-    val losers = Graph.connectedComponents(pairs, "id_a", "id_b")
-      .filter(col("node") =!= col("component"))
-      .select(col("node").as(idCol))
-    docs.join(losers, Seq(idCol), "left_anti")
+    dropLosers(docs, idCol, pairs)
   }
 
   /** [[dedupNearDups]] with QUALITY-AWARE representative selection:
@@ -1141,10 +1151,7 @@ object Dedup {
       rows: DataFrame, idCol: String, vecCol: String,
       signBits: Int, threshold: Double): DataFrame = {
     val pairs = embeddingNearDupPairs(rows, idCol, vecCol, signBits, threshold)
-    val losers = Graph.connectedComponents(pairs, "id_a", "id_b")
-      .filter(col("node") =!= col("component"))
-      .select(col("node").as(idCol))
-    rows.join(losers, Seq(idCol), "left_anti")
+    dropLosers(rows, idCol, pairs)
   }
 
   /** Portable minhash INDEX of a corpus: (id, sig array<string> of

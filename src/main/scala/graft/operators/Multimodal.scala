@@ -441,10 +441,7 @@ object Multimodal {
       docs: DataFrame, idCol: String, payloadCol: String,
       maxHamming: Int = 3, maxBucket: Int = 65536, chunkSize: Int = 256): DataFrame = {
     val pairs = imageNearDupPairs(docs, idCol, payloadCol, maxHamming, maxBucket, chunkSize)
-    val losers = Graph.connectedComponents(pairs, "id_a", "id_b")
-      .filter(col("node") =!= col("component"))
-      .select(col("node").as(idCol))
-    docs.join(losers, Seq(idCol), "left_anti")
+    Dedup.dropLosers(docs, idCol, pairs)
   }
 
   /** [[dedupImageNearDups]] with QUALITY-AWARE representative
@@ -886,10 +883,7 @@ object Multimodal {
       maxBucket: Int = 65536, chunkSize: Int = 1024): DataFrame = {
     val pairs = audioNearDupPairsResampled(
       docs, idCol, payloadCol, msPerSeg, minFrac, maxHamming, maxBucket, chunkSize)
-    val losers = Graph.connectedComponents(pairs, "id_a", "id_b")
-      .filter(col("node") =!= col("component"))
-      .select(col("node").as(idCol))
-    docs.join(losers, Seq(idCol), "left_anti")
+    Dedup.dropLosers(docs, idCol, pairs)
   }
 
   /** Persisted TIME-based audio fingerprint index — one row per
@@ -1123,10 +1117,7 @@ object Multimodal {
       docs: DataFrame, idCol: String, payloadCol: String,
       stride: Int, minFrac: Double = 0.5): DataFrame = {
     val pairs = videoNearDupPairs(docs, idCol, payloadCol, stride, minFrac)
-    val losers = Graph.connectedComponents(pairs, "id_a", "id_b")
-      .filter(col("node") =!= col("component"))
-      .select(col("node").as(idCol))
-    docs.join(losers, Seq(idCol), "left_anti")
+    Dedup.dropLosers(docs, idCol, pairs)
   }
 
   /** Audio near-dup DEDUP output — [[dedupImageNearDups]] for the
@@ -1136,10 +1127,7 @@ object Multimodal {
       docs: DataFrame, idCol: String, payloadCol: String,
       maxHamming: Int = 3, maxBucket: Int = 65536, chunkSize: Int = 256): DataFrame = {
     val pairs = audioNearDupPairs(docs, idCol, payloadCol, maxHamming, maxBucket, chunkSize)
-    val losers = Graph.connectedComponents(pairs, "id_a", "id_b")
-      .filter(col("node") =!= col("component"))
-      .select(col("node").as(idCol))
-    docs.join(losers, Seq(idCol), "left_anti")
+    Dedup.dropLosers(docs, idCol, pairs)
   }
 
   /** SHIFT-TOLERANT video dedup output — [[dedupVideoNearDups]] with
@@ -1156,10 +1144,7 @@ object Multimodal {
       maxBucket: Int = 65536, chunkSize: Int = 1024): DataFrame = {
     val pairs = videoNearDupPairsShifted(
       docs, idCol, payloadCol, stride, minFrac, maxHamming, maxBucket, chunkSize)
-    val losers = Graph.connectedComponents(pairs, "id_a", "id_b")
-      .filter(col("node") =!= col("component"))
-      .select(col("node").as(idCol))
-    docs.join(losers, Seq(idCol), "left_anti")
+    Dedup.dropLosers(docs, idCol, pairs)
   }
 
   /** SHIFT-TOLERANT audio dedup output — [[dedupAudioNearDups]] with
@@ -1173,10 +1158,7 @@ object Multimodal {
       maxBucket: Int = 65536, chunkSize: Int = 1024): DataFrame = {
     val pairs = audioNearDupPairsShifted(
       docs, idCol, payloadCol, segFrames, minFrac, maxHamming, maxBucket, chunkSize)
-    val losers = Graph.connectedComponents(pairs, "id_a", "id_b")
-      .filter(col("node") =!= col("component"))
-      .select(col("node").as(idCol))
-    docs.join(losers, Seq(idCol), "left_anti")
+    Dedup.dropLosers(docs, idCol, pairs)
   }
 
   /** CROSS-MODAL containment search — find catalog IMAGES appearing

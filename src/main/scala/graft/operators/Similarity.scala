@@ -810,7 +810,7 @@ object Similarity {
     * [[Sampling.uniformPerKey]] on purpose: that helper's
     * rank-then-semi-join-back shape exists to keep WIDE payloads off
     * the rank shuffle, but this input is already the narrow
-    * assignment — delegation was measured (PlanDump) to recompute the
+    * assignment — delegation was measured (executed-plan dump) to recompute the
     * corpus×centroid argmax pass twice, once per join side. Ordering
     * is IDENTICAL to uniformPerKey's (md5(salt:id) with the
     * string-cast id tiebreak), so the draw matches what the delegated

@@ -4,26 +4,14 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for specs (one per JVM; sbt forks one
-  * test JVM, so suites share it — cheap and deterministic). */
+  * test JVM, so suites share it — cheap and deterministic), built by
+  * [[Harness]] with the bench's config at 4 cores. */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   def sf(path: String): String = s"/root/testdata/$path"
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // default 100 truncates scan PushedFilters in plan strings,
-      // which plan-shape specs assert on
-      .config("spark.sql.maxMetadataStringLength", "4096")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  val cpus = 4
+  lazy val session: SparkSession = Harness.session(cpus)
 }
