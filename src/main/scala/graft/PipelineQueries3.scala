@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.operators.{LanguageModel, Sampling, Shards}
+import graft.operators.Multimodal.UnitHashes
 
 /** Third pipeline-query wave (round 16): the TRUE n-gram LM
   * perplexity gate ([[graft.operators.LanguageModel.perplexity]]) in
@@ -1178,9 +1179,9 @@ object PipelineQueries3 {
           topDown = i % 2 == 1))
       }
       import s.implicits._
-      operators.Multimodal.videoNearDupPairsShifted(
+      operators.Multimodal.setOverlapPairs(
         vids.toDF("video_id", "payload"), "video_id", "payload",
-        stride = 1, minFrac = 0.5)
+        UnitHashes.videoFrames(stride = 1), minFrac = 0.5)
         .transform(Queries.sortedSmall(_, "id_a", "id_b"))
     })
 
@@ -1359,9 +1360,9 @@ object PipelineQueries3 {
           }))
       }
       import s.implicits._
-      operators.Multimodal.audioNearDupPairsShifted(
+      operators.Multimodal.setOverlapPairs(
         clips.toDF("clip_id", "payload"), "clip_id", "payload",
-        segFrames = 128, minFrac = 0.5)
+        UnitHashes.audioSegments(segFrames = 128), minFrac = 0.5)
         .transform(Queries.sortedSmall(_, "id_a", "id_b"))
     })
 

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.operators.Multimodal.UnitHashes
 
 /** Round-19 pipeline queries: DEDUP OUTPUTS for the shift-tolerant
   * media pair ops (the decision surface [[PipelineQueries3]]'s
@@ -105,9 +106,9 @@ object PipelineQueries4 {
         12L -> "definitely not a video".getBytes("UTF-8"),
         13L -> Array[Byte](0x4, 0x5, 0x6))
       import s.implicits._
-      operators.Multimodal.dedupVideoNearDupsShifted(
+      operators.Multimodal.dedupSetOverlap(
         (vids ++ junk).toDF("video_id", "payload"), "video_id", "payload",
-        stride = 1, minFrac = 0.5)
+        UnitHashes.videoFrames(stride = 1), minFrac = 0.5)
         .select(col("video_id"),
           operators.Multimodal.mediaKind(col("payload")).as("kind"))
         .transform(Queries.sortedSmall(_, "video_id"))
@@ -214,9 +215,9 @@ object PipelineQueries4 {
         12L -> "definitely not audio".getBytes("UTF-8"),
         13L -> Array[Byte](0x7, 0x8))
       import s.implicits._
-      operators.Multimodal.dedupAudioNearDupsShifted(
+      operators.Multimodal.dedupSetOverlap(
         (clips ++ junk).toDF("clip_id", "payload"), "clip_id", "payload",
-        segFrames = 128, minFrac = 0.5)
+        UnitHashes.audioSegments(segFrames = 128), minFrac = 0.5)
         .select(col("clip_id"),
           operators.Multimodal.mediaKind(col("payload")).as("kind"))
         .transform(Queries.sortedSmall(_, "clip_id"))
@@ -300,9 +301,9 @@ object PipelineQueries4 {
           topDown = i % 2 == 1))
       }
       import s.implicits._
-      operators.Multimodal.videoNearDupPairsShifted(
+      operators.Multimodal.setOverlapPairs(
         vids.toDF("video_id", "payload"), "video_id", "payload",
-        stride = 1, minFrac = 0.5, maxHamming = 3)
+        UnitHashes.videoFrames(stride = 1), minFrac = 0.5, maxHamming = 3)
         .transform(Queries.sortedSmall(_, "id_a", "id_b"))
     })
 
@@ -505,7 +506,7 @@ object PipelineQueries4 {
   // --------- incremental shift-tolerant video dedup vs persisted index
   // The video column's growing-corpus shape: history = 4 videos whose
   // DISTINCT sampled-frame hashes persist as an 8-byte-per-hash
-  // parquet index (videoFrameHashIndex); the increment brings a
+  // parquet index (setOverlapIndex of frames); the increment brings a
   // 2-frame trim of history 0 (set containment 1.0 → drop), a
   // brightness +40 re-encode of history 1 (Hamming-0 frame hashes →
   // drop), a fresh family (keep), and junk (keep). The oracle
@@ -583,12 +584,13 @@ object PipelineQueries4 {
         103L -> "not a video".getBytes("UTF-8"))
       import s.implicits._
       val idxDir = Queries.scratchPath(s, "graft-vididx-oracle")
-      operators.Multimodal.videoFrameHashIndex(
-        history.toDF("video_id", "payload"), "video_id", "payload", stride = 1)
+      operators.Multimodal.setOverlapIndex(
+        history.toDF("video_id", "payload"), "video_id", "payload",
+        UnitHashes.videoFrames(stride = 1))
         .write.mode("overwrite").parquet(idxDir)
-      operators.Multimodal.dedupVideosAgainstIndex(
+      operators.Multimodal.dedupAgainstSetOverlapIndex(
         increment.toDF("video_id", "payload"), "video_id", "payload",
-        s.read.parquet(idxDir), stride = 1, minFrac = 0.5)
+        s.read.parquet(idxDir), UnitHashes.videoFrames(stride = 1), minFrac = 0.5)
         .select(col("video_id"),
           operators.Multimodal.mediaKind(col("payload")).as("kind"))
         .transform(Queries.sortedSmall(_, "video_id"))
@@ -683,12 +685,13 @@ object PipelineQueries4 {
         103L -> "junk".getBytes("UTF-8"))
       import s.implicits._
       val idxDir = Queries.scratchPath(s, "graft-audidx-oracle")
-      operators.Multimodal.audioSegmentHashIndex(
-        history.toDF("clip_id", "payload"), "clip_id", "payload", segFrames = 128)
+      operators.Multimodal.setOverlapIndex(
+        history.toDF("clip_id", "payload"), "clip_id", "payload",
+        UnitHashes.audioSegments(segFrames = 128))
         .write.mode("overwrite").parquet(idxDir)
-      operators.Multimodal.dedupAudioAgainstIndex(
+      operators.Multimodal.dedupAgainstSetOverlapIndex(
         increment.toDF("clip_id", "payload"), "clip_id", "payload",
-        s.read.parquet(idxDir), segFrames = 128, minFrac = 0.5)
+        s.read.parquet(idxDir), UnitHashes.audioSegments(segFrames = 128), minFrac = 0.5)
         .select(col("clip_id"),
           operators.Multimodal.mediaKind(col("payload")).as("kind"))
         .transform(Queries.sortedSmall(_, "clip_id"))

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.operators.Multimodal.UnitHashes
 
 /** Round-20 pipeline queries: G.711 µ-law/A-law decode (exact table
   * expansion — fully oracle-checkable like IMA-ADPCM), arbitrary-
@@ -759,9 +760,11 @@ object PipelineQueries5 {
           .localCheckpoint(true),
         () => operators.Multimodal.imageHashIndex(old, "media_id", "payload")
           .localCheckpoint(true),
-        () => operators.Multimodal.videoFrameHashIndex(old, "media_id", "payload", 1)
+        () => operators.Multimodal.setOverlapIndex(
+          old, "media_id", "payload", UnitHashes.videoFrames(1))
           .localCheckpoint(true),
-        () => operators.Multimodal.audioSegmentHashIndex(old, "media_id", "payload", 128)
+        () => operators.Multimodal.setOverlapIndex(
+          old, "media_id", "payload", UnitHashes.audioSegments(128))
           .localCheckpoint(true))
       operators.Multimodal.incrementalMediaCurationReport(
         nw, "media_id", "payload", oldReport, imgIdx, vidIdx, audIdx)
@@ -952,9 +955,9 @@ object PipelineQueries5 {
         // 900 Hz: derived segFrames = 900·65/1000 = 58 < 65 → NULL
         14L -> operators.Multimodal.encodeWav(1, 900, 1800, (c, f) => u(0)(c, f)))
       import s.implicits._
-      operators.Multimodal.audioNearDupPairsResampled(
+      operators.Multimodal.setOverlapPairs(
         (clips ++ extra).toDF("clip_id", "payload"), "clip_id", "payload",
-        msPerSeg = 65, minFrac = 0.5)
+        UnitHashes.audioSegmentsMs(msPerSeg = 65), minFrac = 0.5)
         .transform(Queries.sortedSmall(_, "id_a", "id_b"))
     })
 
@@ -1060,9 +1063,9 @@ object PipelineQueries5 {
         13L -> Array[Byte](0x7, 0x8),
         14L -> operators.Multimodal.encodeWav(1, 900, 1800, (c, f) => u(0)(c, f)))
       import s.implicits._
-      operators.Multimodal.dedupAudioNearDupsResampled(
+      operators.Multimodal.dedupSetOverlap(
         (clips ++ extra).toDF("clip_id", "payload"), "clip_id", "payload",
-        msPerSeg = 65, minFrac = 0.5)
+        UnitHashes.audioSegmentsMs(msPerSeg = 65), minFrac = 0.5)
         .select(col("clip_id"),
           operators.Multimodal.mediaKind(col("payload")).as("kind"))
         .transform(Queries.sortedSmall(_, "clip_id"))
@@ -1160,12 +1163,13 @@ object PipelineQueries5 {
         104L -> "junk".getBytes("UTF-8"))
       import s.implicits._
       val idxDir = Queries.scratchPath(s, "graft-audidxms-oracle")
-      operators.Multimodal.audioSegmentHashIndexMs(
-        history.toDF("clip_id", "payload"), "clip_id", "payload", msPerSeg = 65)
+      operators.Multimodal.setOverlapIndex(
+        history.toDF("clip_id", "payload"), "clip_id", "payload",
+        UnitHashes.audioSegmentsMs(msPerSeg = 65))
         .write.mode("overwrite").parquet(idxDir)
-      operators.Multimodal.dedupAudioAgainstIndexMs(
+      operators.Multimodal.dedupAgainstSetOverlapIndex(
         increment.toDF("clip_id", "payload"), "clip_id", "payload",
-        s.read.parquet(idxDir), msPerSeg = 65, minFrac = 0.5)
+        s.read.parquet(idxDir), UnitHashes.audioSegmentsMs(msPerSeg = 65), minFrac = 0.5)
         .select(col("clip_id"),
           operators.Multimodal.mediaKind(col("payload")).as("kind"))
         .transform(Queries.sortedSmall(_, "clip_id"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, Graph, Similarity}
+import graft.operators.Multimodal.UnitHashes
 
 /** Scale-stress harness for the dedup/ANN family (VERDICT r6 #2): the
   * 100 TB design claims rest on plan shape; this main turns them into
@@ -360,9 +361,9 @@ object ScaleStress {
           // — identical 7,791,265 rows, 17.5→12.5 s, max-task/stage-
           // median 3.15→1.13 (frame-hash flood cells densify with
           // scale; 1024 under-splits them at 500×)
-          operators.Multimodal.videoNearDupPairsShifted(
-            spark.read.parquet(feed), "vid_id", "payload", stride = 4,
-            chunkSize = sys.env.getOrElse("GRAFT_SHIFTED_CHUNK", "256").toInt).count()
+          operators.Multimodal.setOverlapPairs(
+            spark.read.parquet(feed), "vid_id", "payload", UnitHashes.videoFrames(stride = 4),
+            chunkSize = 256).count()
         }
         // FRAMES-linearity leg (the r17 verdict's exact question —
         // the pre-fix form was quadratic in frames PER VIDEO, which
@@ -452,14 +453,10 @@ object ScaleStress {
         }
         // the trim-tolerant segment-set form on the SAME feed: 31
         // 128-frame segments per 4000-frame clip, exact set overlap.
-        // GRAFT_SHIFTED_CHUNK: A/B lever for the r19 chunk-cell fix —
-        // a huge value forces k=1 everywhere (the pre-fix single-cell
-        // join shape) for same-session comparison.
         measure("audio_near_dup_shifted", scale) {
-          operators.Multimodal.audioNearDupPairsShifted(
+          operators.Multimodal.setOverlapPairs(
             spark.read.parquet(feed), "clip_id", "payload",
-            segFrames = 128,
-            chunkSize = sys.env.getOrElse("GRAFT_SHIFTED_CHUNK", "1024").toInt).count()
+            UnitHashes.audioSegments(segFrames = 128)).count()
         }
         // ARBITRARY-offset form, own feed: the shared feed's linear
         // sawtooth has a ~1.3-frame period — DEGENERATE for sliding
@@ -471,7 +468,7 @@ object ScaleStress {
         // fixed-phase forms), rest unique. hop=1 emits ~3873 sliding
         // hashes per 4000-frame clip — the documented ~128× probe-
         // volume price of full trim tolerance (catalog side stays
-        // single-phase). GRAFT_OFFSET_HOP trades it back.
+        // single-phase).
         val offFeed = s"${sys.props("java.io.tmpdir")}/graft-awoffeed-$scale"
         locally {
           import spark.implicits._
@@ -503,7 +500,7 @@ object ScaleStress {
           operators.Multimodal.audioNearDupPairsOffset(
             spark.read.parquet(offFeed), "clip_id", "payload",
             segFrames = 128,
-            hop = sys.env.getOrElse("GRAFT_OFFSET_HOP", "1").toInt).count()
+            hop = 1).count()
         }
       }
       // ---- sample-rate-tolerant near-dup (r20): the ms-segmentation
@@ -542,15 +539,15 @@ object ScaleStress {
             .write.mode("overwrite").parquet(feed)
         }
         measure("audio_resample_near_dup", scale) {
-          operators.Multimodal.audioNearDupPairsResampled(
+          operators.Multimodal.setOverlapPairs(
             spark.read.parquet(feed), "clip_id", "payload",
-            msPerSeg = 65,
+            UnitHashes.audioSegmentsMs(msPerSeg = 65),
             // 256, not the media-family 1024: same-session 200× A/B
             // (BASELINE.md r20) — identical 1,994,968 rows, wall-
             // neutral, max-task/stage-median 1.50→1.12 (this feed's
             // flood cells are smaller than the shifted arm's, so the
             // finer chunk balances where 1024 under-splits)
-            chunkSize = sys.env.getOrElse("GRAFT_RESAMPLE_CHUNK", "256").toInt).count()
+            chunkSize = 256).count()
         }
       }
       // ---- r19 media extensions: MJPEG decode volume, audio-in-video
@@ -600,10 +597,10 @@ object ScaleStress {
             // 256→23.0 s @1.46, 128→16.6 s @1.02, rows identical —
             // the Hamming-3 band join amplifies this feed's cells
             // harder than the exact-match shifted arm's
-            operators.Multimodal.videoNearDupPairsShifted(
+            operators.Multimodal.setOverlapPairs(
               spark.read.parquet(feed), "vid_id", "payload",
-              stride = 4, minFrac = 0.5, maxHamming = 3,
-              chunkSize = sys.env.getOrElse("GRAFT_SHIFTED_CHUNK", "128").toInt).count()
+              UnitHashes.videoFrames(stride = 4), minFrac = 0.5, maxHamming = 3,
+              chunkSize = 128).count()
           }
         }
         // audio-in-video containment: 200 videos per unit scale with
@@ -696,7 +693,7 @@ object ScaleStress {
         }
         // incremental shift-tolerant VIDEO dedup vs the persisted
         // frame-hash index (audio shares the identical
-        // setOverlapIdsAgainstIndex core and plan — one growth arm
+        // dedupAgainstSetOverlapIndex core and plan — one growth arm
         // covers the shape): history = 200 AVIs/unit scale indexed
         // outside the timed body; increment = 10%, half 4-frame trims
         // of history heads (drop), half fresh content (keep).
@@ -713,8 +710,8 @@ object ScaleStress {
               .repartition(spark.sparkContext.defaultParallelism)
               .map(i => (i, operators.Multimodal.encodeAvi(32, 24, 24, pix(i.toInt))))
               .toDF("vid_id", "payload")
-            operators.Multimodal.videoFrameHashIndex(
-              hist, "vid_id", "payload", stride = 4)
+            operators.Multimodal.setOverlapIndex(
+              hist, "vid_id", "payload", UnitHashes.videoFrames(stride = 4))
               .write.mode("overwrite").parquet(idxDir)
             spark.range(nInc).repartition(spark.sparkContext.defaultParallelism)
               .map { i =>
@@ -733,9 +730,9 @@ object ScaleStress {
               .write.mode("overwrite").parquet(incFeed)
           }
           measure("incremental_video_dedup", scale) {
-            operators.Multimodal.dedupVideosAgainstIndex(
+            operators.Multimodal.dedupAgainstSetOverlapIndex(
               spark.read.parquet(incFeed), "vid_id", "payload",
-              spark.read.parquet(idxDir), stride = 4, minFrac = 0.5).count()
+              spark.read.parquet(idxDir), UnitHashes.videoFrames(stride = 4), minFrac = 0.5).count()
           }
         }
         // animated GIF in the video family (r20): 100 GIFs/unit
@@ -772,8 +769,9 @@ object ScaleStress {
               .write.mode("overwrite").parquet(feed)
           }
           measure("gif_anim_near_dup", scale) {
-            operators.Multimodal.videoNearDupPairsShifted(
-              spark.read.parquet(feed), "gif_id", "payload", stride = 1).count()
+            operators.Multimodal.setOverlapPairs(
+              spark.read.parquet(feed), "gif_id", "payload",
+              UnitHashes.videoFrames(stride = 1)).count()
           }
         }
         // the composite media curation report over a MIXED feed
@@ -871,9 +869,11 @@ object ScaleStress {
               .write.mode("overwrite").parquet(oldRepDir)
             operators.Multimodal.imageHashIndex(old, "media_id", "payload")
               .write.mode("overwrite").parquet(idxImgDir)
-            operators.Multimodal.videoFrameHashIndex(old, "media_id", "payload", 4)
+            operators.Multimodal.setOverlapIndex(
+              old, "media_id", "payload", UnitHashes.videoFrames(4))
               .write.mode("overwrite").parquet(idxVidDir)
-            operators.Multimodal.audioSegmentHashIndex(old, "media_id", "payload", 128)
+            operators.Multimodal.setOverlapIndex(
+              old, "media_id", "payload", UnitHashes.audioSegments(128))
               .write.mode("overwrite").parquet(idxAudDir)
             val base = (nImg + nVid + nAud + nJunk).toLong
             val addImgs = spark.range(nImg / 20)
@@ -960,12 +960,9 @@ object ScaleStress {
         // heap or ≥4× reducers both do, and reducers are the shape a
         // cluster actually has).
         val prev = spark.conf.get("spark.sql.shuffle.partitions")
-        // GRAFT_NGRAM_REDUCERS: reducer-count A/B lever for the ≥64×
-        // arms (r14 measured 256 sufficient to avoid the OOM; the
-        // open question is whether more reducers shrink the overlap
-        // agg's per-task state below the spill point — r14 #3)
-        val reducers = sys.env.getOrElse("GRAFT_NGRAM_REDUCERS", "256")
-        if (scale >= 64) spark.conf.set("spark.sql.shuffle.partitions", reducers)
+        // 256 reducers: r14 measured it sufficient to avoid the OOM
+        val reducers = 256
+        if (scale >= 64) spark.conf.set("spark.sql.shuffle.partitions", reducers.toLong)
         try {
           val pairs = Dedup.ngramJaccardPairs(
             docs, "doc_id", "text", n = 3, threshold = 0.5).count()

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.streaming.StreamingOps
+import graft.operators.Multimodal.UnitHashes
 
 /** Scale-stress harness for the STREAMING operators (VERDICT r12 #3 /
   * r13 #2): the batch family's 100 TB claims are measured by
@@ -248,12 +249,12 @@ object StreamScaleStress {
         // four broadcast joins with ONE pure per-row expression —
         // claims: zero state, flat walls, and per-batch cost at or
         // under the join gate's (no join stage left in the plan)
-        val wavBitmaps = graft.operators.Multimodal.audioSegmentBlockBitmaps(
+        val wavBitmaps = graft.operators.Multimodal.blockBitmaps(
           spark.read.parquet(wavFeed).filter(pmod(col("clip_id"), lit(10)) === 0),
-          "payload", segFrames = 128)
+          "payload", UnitHashes.audioSegments(segFrames = 128))
         measure("stream_audio_gate_shifted", scale, wavFeed, "append") { s =>
-          StreamingOps.dropAudioNearDupsShifted(
-            s, "payload", wavBitmaps, segFrames = 128)
+          StreamingOps.dropSetOverlapNearDups(
+            s, "payload", UnitHashes.audioSegments(segFrames = 128), wavBitmaps)
         }
         // rate-tolerant twin over a MIXED-RATE feed: families where
         // the catalog's 8 kHz recording re-arrives as a 16 kHz and a
@@ -278,12 +279,12 @@ object StreamScaleStress {
               }))
           }.toDF("clip_id", "payload")
           .repartition(nBatches).write.mode("overwrite").parquet(arsFeed)
-        val arsBitmaps = graft.operators.Multimodal.audioSegmentBlockBitmapsMs(
+        val arsBitmaps = graft.operators.Multimodal.blockBitmaps(
           spark.read.parquet(arsFeed).filter(pmod(col("clip_id"), lit(10)) === 0),
-          "payload", msPerSeg = 65)
+          "payload", UnitHashes.audioSegmentsMs(msPerSeg = 65))
         measure("stream_audio_gate_resampled", scale, arsFeed, "append") { s =>
-          StreamingOps.dropAudioNearDupsResampled(
-            s, "payload", arsBitmaps, msPerSeg = 65)
+          StreamingOps.dropSetOverlapNearDups(
+            s, "payload", UnitHashes.audioSegmentsMs(msPerSeg = 65), arsBitmaps)
         }
         // video gate (bitmap form — the video column's only stream
         // gate): REAL AVI container walks per arriving row, catalog =
@@ -302,12 +303,12 @@ object StreamScaleStress {
                 ((x * 7 + y * 13 + c * 31 + f * 17) * (b % 9973 + 1) + b) % 190 + shift))
           }.toDF("video_id", "payload")
           .repartition(nBatches).write.mode("overwrite").parquet(aviFeed)
-        val aviBitmaps = graft.operators.Multimodal.videoFrameBlockBitmaps(
+        val aviBitmaps = graft.operators.Multimodal.blockBitmaps(
           spark.read.parquet(aviFeed).filter(pmod(col("video_id"), lit(10)) === 0),
-          "payload", stride = 2)
+          "payload", UnitHashes.videoFrames(stride = 2))
         measure("stream_video_gate_shifted", scale, aviFeed, "append") { s =>
-          StreamingOps.dropVideoNearDupsShifted(
-            s, "payload", aviBitmaps, stride = 2)
+          StreamingOps.dropSetOverlapNearDups(
+            s, "payload", UnitHashes.videoFrames(stride = 2), aviBitmaps)
         }
         // mixed-stream curation VERDICTS: one pass over all three
         // kinds + junk with CaseWhen-lazy per-kind dispatch against
@@ -316,9 +317,9 @@ object StreamScaleStress {
         // matched kinds' decode costs (the dispatch never walks the
         // wrong decoder).
         if (opFilter.isEmpty || opFilter.exists("stream_media_verdicts".contains)) {
-          val imgBitmaps = graft.operators.Multimodal.imageBlockBitmaps(
+          val imgBitmaps = graft.operators.Multimodal.blockBitmaps(
             spark.read.parquet(imgFeed).filter(pmod(col("img_id"), lit(10)) === 0),
-            "payload")
+            "payload", UnitHashes.image)
           val mixedFeed = s"$work/mixedfeed-$scale"
           spark.read.parquet(imgFeed)
             .select(col("img_id").as("media_id"), col("payload"))

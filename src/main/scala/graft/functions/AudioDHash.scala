@@ -154,7 +154,8 @@ case class AudioDHash64(child: Expression)
   * clip floor rule — is what makes the hashes TRIM-TOLERANT: a copy
   * missing its first k·segFrames frames produces the identical hash
   * sequence shifted by k, so a hash-SET overlap pairs them
-  * ([[graft.operators.Multimodal.audioNearDupPairsShifted]]), while
+  * ([[graft.operators.Multimodal.setOverlapPairs]] with
+  * [[graft.operators.Multimodal.UnitHashes.audioSegments]]), while
   * the whole-clip hash re-stretches its 65 windows over the new
   * length and misses. Tolerance is modulo segFrames, the exact
   * analog of the video form's stride caveat. Gain invariance carries

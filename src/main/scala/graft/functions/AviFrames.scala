@@ -461,7 +461,9 @@ case class AviFramePixels(left: Expression, right: Expression)
 /** Frame sampling + per-frame dHash in ONE container walk:
   * `array<struct<frame_idx:int, dhash:long>>` for frames 0, stride,
   * 2·stride, … — the video near-dup frontier
-  * ([[graft.operators.Multimodal.videoNearDupPairs]]) without the
+  * ([[graft.operators.Multimodal.videoNearDupPairs]] and the
+  * [[graft.operators.Multimodal.UnitHashes.videoFrames]] extractor
+  * of the set-overlap family) without the
   * quadratic decode the composed form
   * (`ImageDHash64(AviFramePixels(payload, f), …)` per exploded frame
   * row) pays: that shape re-runs the full container decode once per
@@ -628,7 +630,9 @@ case class AviFrameStats(left: Expression, right: Expression)
   * any uniform gain) hashes IDENTICALLY to the corresponding
   * segments of the track, and a hash-set join finds which videos
   * CONTAIN a catalog clip
-  * ([[graft.operators.Multimodal.audioVideoMatches]]). Same segment
+  * ([[graft.operators.Multimodal.audioVideoMatches]]; as a stream
+  * gate, [[graft.operators.Multimodal.UnitHashes.videoSoundtrack]]).
+  * Same segment
   * semantics as the WAV form: trailing partial ≥65 frames hashes
   * over its actual length, shorter is dropped; tolerance is modulo
   * segFrames. NULL when the payload is out of AVI scope, carries no

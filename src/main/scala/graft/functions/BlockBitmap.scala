@@ -9,9 +9,8 @@ import org.apache.spark.sql.types._
 /** Fraction of a 64-bit-hash array whose PIGEONHOLE BLOCKS hit a
   * reference catalog — the per-row kernel of the streaming
   * trim-tolerant media gates
-  * ([[graft.operators.Multimodal.segmentBlockBitmaps]] builds the
-  * catalog; `StreamingOps.dropAudioNearDupsShifted` /
-  * `dropVideoNearDupsShifted` apply it).
+  * ([[graft.operators.Multimodal.blockBitmaps]] builds the
+  * catalog; `StreamingOps.dropSetOverlapNearDups` applies it).
   *
   * The catalog is FOUR 65,536-bit bitmaps (one per 16-bit block
   * band), 32 KB total — bounded by the block SPACE, never the

@@ -390,9 +390,49 @@ object Dedup {
     * (the CC label), in ONE left anti equi-join on `idCol` against
     * the non-representative ids only — unclustered rows pass through
     * and the payload never shuffles on the dedup decision. */
-  def dropLosers(docs: DataFrame, idCol: String, pairs: DataFrame): DataFrame = {
-    val losers = Graph.connectedComponents(pairs, "id_a", "id_b")
+  def dropLosers(docs: DataFrame, idCol: String, pairs: DataFrame): DataFrame =
+    docs.join(loserIds(pairs, idCol), Seq(idCol), "left_anti")
+
+  /** The ids [[dropLosers]] drops: every clustered node of `pairs`
+    * (`id_a`, `id_b`) that is not its cluster's smallest id, as one
+    * `idCol` column. */
+  def loserIds(pairs: DataFrame, idCol: String): DataFrame =
+    Graph.connectedComponents(pairs, "id_a", "id_b")
       .filter(col("node") =!= col("component"))
+      .select(col("node").as(idCol))
+
+  /** [[dropLosers]] with QUALITY-AWARE representatives: each cluster
+    * keeps its member with the highest `quality` (ties → smallest id).
+    *
+    * Scale shape: the CC output, then per-cluster argmax as ONE keyed
+    * aggregation over the clustered nodes only —
+    * `min_by(node, struct(−quality, node))` (minimizing (−q, id) IS
+    * (max q, then min id); map-side partial merges, never a window
+    * sort over the corpus; the intermediate is groups-sized), a
+    * groups-sized join back to mark losers, and the same single
+    * left-anti equi-join against the corpus. The corpus payload never
+    * shuffles on the dedup decision. The id type stays fully generic
+    * (string ids included — the struct tie-break field uses the
+    * node's own ordering); only `quality` must be NUMERIC, for the
+    * negation.
+    *
+    * `quality` is evaluated against a narrow (id, quality) projection
+    * of `docs` (the full row never rides the argmax shuffle) and
+    * should be non-null: null-quality members are excluded from the
+    * argmax (they never win), and a cluster whose members are ALL
+    * null-quality keeps every member (no representative is chosen —
+    * coalesce a default in the caller if that can occur). */
+  def dropLosersBest(
+      docs: DataFrame, idCol: String, pairs: DataFrame, quality: Column): DataFrame = {
+    val clustered = Graph.connectedComponents(pairs, "id_a", "id_b")
+      .join(docs.select(col(idCol).as("node"), quality.as("__q")), "node")
+    // the isNotNull guard replicates max()'s null semantics: a struct
+    // with a null field would otherwise sort FIRST and win min_by
+    val best = clustered.filter(col("__q").isNotNull)
+      .groupBy("component")
+      .agg(min_by(col("node"), struct((-col("__q")).as("nq"), col("node"))).as("__best"))
+    val losers = clustered.join(best, "component")
+      .filter(col("node") =!= col("__best"))
       .select(col("node").as(idCol))
     docs.join(losers, Seq(idCol), "left_anti")
   }
@@ -428,26 +468,9 @@ object Dedup {
     * highest-quality-score, the canonical-URL one — not whichever
     * happened to get the lowest id; with min-id selection a truncated
     * or boilerplate-padded variant can displace the clean original.
-    *
-    * Scale shape: identical to [[dedupNearDups]] up to the CC output,
-    * then per-cluster argmax as ONE keyed aggregation over the
-    * clustered nodes only — `min_by(node, struct(−quality, node))`
-    * (minimizing (−q, id) IS (max q, then min id); map-side partial
-    * merges, never a window sort over the corpus; the intermediate is
-    * groups-sized), a groups-sized join back to mark losers, and the
-    * same single left-anti equi-join against the corpus. The corpus
-    * payload still never shuffles on the dedup decision. The id type
-    * stays fully generic (string ids included — the struct tie-break
-    * field uses the node's own ordering); only `qualityCol` must be
-    * NUMERIC, for the negation (quality is a score by construction).
-    *
-    * `qualityCol` must be a column of `docs` (evaluated against a
-    * narrow (id, quality) projection — the full row never rides the
-    * argmax shuffle) and should be non-null: null-quality members are
-    * excluded from the argmax (they never win), and a cluster whose
-    * members are ALL null-quality keeps every member (no
-    * representative is chosen — coalesce a default in the caller if
-    * that can occur). */
+    * [[dedupNearDups]]'s pairs through [[dropLosersBest]], whose
+    * scaladoc gives the scale shape and the null-quality rule;
+    * `qualityCol` must be a numeric column of `docs`. */
   def dedupNearDupsBest(
       docs: DataFrame, idCol: String, textCol: String,
       n: Int, k: Int, rowsPerBand: Int, threshold: Double,
@@ -455,17 +478,7 @@ object Dedup {
       maxBucket: Int = 1024): DataFrame = {
     val pairs =
       nearDupPairsShingled(docs, idCol, textCol, n, k, rowsPerBand, threshold, maxBucket)
-    val clustered = Graph.connectedComponents(pairs, "id_a", "id_b")
-      .join(docs.select(col(idCol).as("node"), qualityCol.as("__q")), "node")
-    // the isNotNull guard replicates max()'s null semantics: a struct
-    // with a null field would otherwise sort FIRST and win min_by
-    val best = clustered.filter(col("__q").isNotNull)
-      .groupBy("component")
-      .agg(min_by(col("node"), struct((-col("__q")).as("nq"), col("node"))).as("__best"))
-    val losers = clustered.join(best, "component")
-      .filter(col("node") =!= col("__best"))
-      .select(col("node").as(idCol))
-    docs.join(losers, Seq(idCol), "left_anti")
+    dropLosersBest(docs, idCol, pairs, qualityCol)
   }
 
   /** Leakage-safe train/val/test assignment: every near-dup GROUP

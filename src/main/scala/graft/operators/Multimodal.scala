@@ -255,35 +255,55 @@ object Multimodal {
     * few-file scan would run at scan parallelism). */
   def imageNearDupPairs(
       docs: DataFrame, idCol: String, payloadCol: String,
-      maxHamming: Int = 3, maxBucket: Int = 65536, chunkSize: Int = 256): DataFrame = {
+      maxHamming: Int = 3, maxBucket: Int = 65536, chunkSize: Int = 256): DataFrame =
+    singleHashPairs(docs, idCol, payloadCol, imageDHash,
+      maxHamming, maxBucket, chunkSize)
+
+  /** The body of [[imageNearDupPairs]] and [[audioNearDupPairs]]:
+    * one 64-bit fingerprint per payload (`hash`, NULL when
+    * undecodable) through the 4×16-bit pigeonhole band join. */
+  private def singleHashPairs(
+      docs: DataFrame, idCol: String, payloadCol: String, hash: Column => Column,
+      maxHamming: Int, maxBucket: Int, chunkSize: Int): DataFrame = {
     Dedup.requireHammingArgs(maxHamming, chunkSize) // before the decode job
-    val sig = docs
-      .select(col(idCol), col(payloadCol))
-      .repartition(Dedup.pinnedParts(docs))
-      .select(col(idCol).as("id"), imageDHash(col(payloadCol)).as("__dh"))
-      .filter(col("__dh").isNotNull)
-      .select(
-        col("id") +:
-          (0 until 4).map(b =>
-            shiftrightunsigned(col("__dh"), 48 - 16 * b)
-              .bitwiseAND(lit(0xFFFFL)).cast("int").as(s"__b$b")): _*)
+    val sig = hashRows(docs, idCol, payloadCol, hash, "id", "__dh")
+      .select(col("id") +: namedBlocks(col("__dh")): _*)
       .localCheckpoint(true)
     Dedup.hammingBandPairs(sig, maxHamming, maxBucket, chunkSize)
   }
 
-  /** The four 16-bit dHash blocks of an image payload as columns
-    * __b0..__b3 (map-side only — usable on a streaming DataFrame;
-    * NULL for undecodable payloads, which therefore never match any
-    * block probe). The multimodal mirror of
-    * [[Dedup.withSimhashBlocks]]. */
-  def withImageBlocks(df: DataFrame, payloadCol: String): DataFrame = {
-    val withH = df.withColumn("__dh", imageDHash(col(payloadCol)))
-    withH.select(
-      df.columns.toIndexedSeq.map(col) ++
-        (0 until 4).map(b =>
-          shiftrightunsigned(col("__dh"), 48 - 16 * b)
-            .bitwiseAND(lit(0xFFFFL)).cast("int").as(s"__b$b")): _*)
-  }
+  /** The decode frontier: (idAs, hashAs) rows of the payloads `hash`
+    * decodes (NULL hashes dropped), the decode spread off the file
+    * scan by one pinned round-robin exchange. */
+  private def hashRows(
+      docs: DataFrame, idCol: String, payloadCol: String, hash: Column => Column,
+      idAs: String, hashAs: String): DataFrame =
+    docs
+      .select(col(idCol), col(payloadCol))
+      .repartition(Dedup.pinnedParts(docs)) // decode frontier spread
+      .select(col(idCol).as(idAs), hash(col(payloadCol)).as(hashAs))
+      .filter(col(hashAs).isNotNull)
+
+  /** The four 16-bit pigeonhole blocks of a 64-bit hash, high block
+    * first — the split every block join, block table and block bitmap
+    * in the media family keys on. */
+  private def hashBlocks(h: Column): Seq[Column] =
+    (0 until 4).map(b =>
+      shiftrightunsigned(h, 48 - 16 * b).bitwiseAND(lit(0xFFFFL)).cast("int"))
+
+  /** [[hashBlocks]] named __b0..__b3, the columns
+    * [[Dedup.hammingBandPairs]] and the streaming block probes read. */
+  private def namedBlocks(h: Column): Seq[Column] =
+    hashBlocks(h).zipWithIndex.map { case (c, b) => c.as(s"__b$b") }
+
+  /** The four 16-bit blocks of a 64-bit payload hash (e.g.
+    * `imageDHash(col("payload"))`) as columns __b0..__b3 (map-side
+    * only — usable on a streaming DataFrame; NULL for undecodable
+    * payloads, which therefore never match any block probe). The
+    * multimodal mirror of [[Dedup.withSimhashBlocks]]. */
+  def withHashBlocks(df: DataFrame, hash: Column): DataFrame =
+    df.withColumn("__dh", hash)
+      .select(df.columns.toIndexedSeq.map(col) ++ namedBlocks(col("__dh")): _*)
 
   /** The reference image corpus's distinct dHash blocks, (band, bv)
     * — the membership table for INCREMENTAL image dedup (filter new
@@ -295,13 +315,7 @@ object Multimodal {
     * pigeonhole recall guarantee: a new image within Hamming ≤3 of
     * ANY reference image shares at least one block. */
   def imageBlockTable(docs: DataFrame, payloadCol: String): DataFrame =
-    docs
-      .select(imageDHash(col(payloadCol)).as("__dh"))
-      .filter(col("__dh").isNotNull)
-      .select(posexplode(array((0 until 4).map(b =>
-        shiftrightunsigned(col("__dh"), 48 - 16 * b)
-          .bitwiseAND(lit(0xFFFFL)).cast("int")): _*)).as(Seq("band", "bv")))
-      .distinct()
+    singleHashBlockTable(docs, payloadCol, imageDHash)
 
   /** The reference audio catalog's distinct envelope-hash blocks,
     * (band, bv) — the membership table for INCREMENTAL audio dedup
@@ -309,12 +323,15 @@ object Multimodal {
     * ≤262,144-row bound and pigeonhole recall contract as
     * [[imageBlockTable]]. */
   def audioBlockTable(docs: DataFrame, payloadCol: String): DataFrame =
+    singleHashBlockTable(docs, payloadCol, audioDHash)
+
+  /** The body of [[imageBlockTable]] and [[audioBlockTable]]. */
+  private def singleHashBlockTable(
+      docs: DataFrame, payloadCol: String, hash: Column => Column): DataFrame =
     docs
-      .select(audioDHash(col(payloadCol)).as("__dh"))
+      .select(hash(col(payloadCol)).as("__dh"))
       .filter(col("__dh").isNotNull)
-      .select(posexplode(array((0 until 4).map(b =>
-        shiftrightunsigned(col("__dh"), 48 - 16 * b)
-          .bitwiseAND(lit(0xFFFFL)).cast("int")): _*)).as(Seq("band", "bv")))
+      .select(posexplode(array(hashBlocks(col("__dh")): _*)).as(Seq("band", "bv")))
       .distinct()
 
   /** Portable image fingerprint INDEX of a corpus: (id, dhash) — the
@@ -327,11 +344,7 @@ object Multimodal {
     * verify — historical payloads are never read again. Undecodable
     * payloads index nothing (they can never near-dup). */
   def imageHashIndex(docs: DataFrame, idCol: String, payloadCol: String): DataFrame =
-    docs
-      .select(col(idCol), col(payloadCol))
-      .repartition(Dedup.pinnedParts(docs)) // decode frontier spread
-      .select(col(idCol).as("id"), imageDHash(col(payloadCol)).as("dhash"))
-      .filter(col("dhash").isNotNull)
+    hashRows(docs, idCol, payloadCol, imageDHash, "id", "dhash")
 
   /** The MATCHED-id set behind [[dedupImagesAgainstIndex]]: distinct
     * ids of `newDocs` whose dHash lands within `maxHamming` of some
@@ -356,11 +369,7 @@ object Multimodal {
       maxHamming: Int = 3, maxBucket: Int = 65536, chunkSize: Int = 1024,
       excludeSameId: Boolean = false): DataFrame = {
     Dedup.requireHammingArgs(maxHamming, chunkSize) // before the decode job
-    val probe = newDocs
-      .select(col(idCol), col(payloadCol))
-      .repartition(Dedup.pinnedParts(newDocs)) // decode frontier spread
-      .select(col(idCol).as("__nid"), imageDHash(col(payloadCol)).as("__dhn"))
-      .filter(col("__dhn").isNotNull)
+    val probe = hashRows(newDocs, idCol, payloadCol, imageDHash, "__nid", "__dhn")
     imageIdxMatches(probe, index, maxHamming, maxBucket, chunkSize, excludeSameId)
       .select(col("__nid").as(idCol)).distinct()
   }
@@ -376,9 +385,7 @@ object Multimodal {
       excludeSameId: Boolean): DataFrame = {
     require(maxBucket > 1, s"maxBucket=$maxBucket must exceed 1")
     Dedup.requireHammingArgs(maxHamming, chunkSize)
-    def blocks(h: Column): Column = array((0 until 4).map(b =>
-      shiftrightunsigned(h, 48 - 16 * b)
-        .bitwiseAND(lit(0xFFFFL)).cast("int")): _*)
+    def blocks(h: Column): Column = array(hashBlocks(h): _*)
     val pb = probe.select(col("__nid"), col("__dhn"),
       posexplode(blocks(col("__dhn"))).as(Seq("__band", "__bv")))
     val ib0 = index
@@ -451,10 +458,8 @@ object Multimodal {
     * of the smallest id. The semantic a real image-dedup pass wants:
     * dHash is exact-NN-rescale-invariant, so a thumbnail and its
     * original land in ONE cluster — min-id selection would keep
-    * whichever got the lower id, this keeps the original. Same scale
-    * shape: per-cluster argmax as one `min_by` aggregation over
-    * clustered nodes only (groups-sized, map-side partials), payload
-    * never shuffles on the decision; clustered members decoded by
+    * whichever got the lower id, this keeps the original. The argmax
+    * is [[Dedup.dropLosersBest]]; clustered members decoded by
     * definition (they paired), so the quality is never null for a
     * competing node. */
   def dedupImageNearDupsBest(
@@ -462,16 +467,7 @@ object Multimodal {
       maxHamming: Int = 3, maxBucket: Int = 65536, chunkSize: Int = 256): DataFrame = {
     val pairs = imageNearDupPairs(docs, idCol, payloadCol, maxHamming, maxBucket, chunkSize)
     val m = imageMeta(col(payloadCol))
-    val quality = abs(m.getField("width") * m.getField("height"))
-    val clustered = Graph.connectedComponents(pairs, "id_a", "id_b")
-      .join(docs.select(col(idCol).as("node"), quality.as("__q")), "node")
-    val best = clustered.filter(col("__q").isNotNull)
-      .groupBy("component")
-      .agg(min_by(col("node"), struct((-col("__q")).as("nq"), col("node"))).as("__best"))
-    val losers = clustered.join(best, "component")
-      .filter(col("node") =!= col("__best"))
-      .select(col("node").as(idCol))
-    docs.join(losers, Seq(idCol), "left_anti")
+    Dedup.dropLosersBest(docs, idCol, pairs, abs(m.getField("width") * m.getField("height")))
   }
 
   /** 64-bit gain-invariant audio fingerprint of a PCM WAV payload —
@@ -493,21 +489,9 @@ object Multimodal {
     * near 32. Output: (id_a, id_b, hamming), id_a < id_b. */
   def audioNearDupPairs(
       docs: DataFrame, idCol: String, payloadCol: String,
-      maxHamming: Int = 3, maxBucket: Int = 65536, chunkSize: Int = 256): DataFrame = {
-    Dedup.requireHammingArgs(maxHamming, chunkSize) // before the decode job
-    val sig = docs
-      .select(col(idCol), col(payloadCol))
-      .repartition(Dedup.pinnedParts(docs)) // decode frontier spread
-      .select(col(idCol).as("id"), audioDHash(col(payloadCol)).as("__dh"))
-      .filter(col("__dh").isNotNull)
-      .select(
-        col("id") +:
-          (0 until 4).map(b =>
-            shiftrightunsigned(col("__dh"), 48 - 16 * b)
-              .bitwiseAND(lit(0xFFFFL)).cast("int").as(s"__b$b")): _*)
-      .localCheckpoint(true)
-    Dedup.hammingBandPairs(sig, maxHamming, maxBucket, chunkSize)
-  }
+      maxHamming: Int = 3, maxBucket: Int = 65536, chunkSize: Int = 256): DataFrame =
+    singleHashPairs(docs, idCol, payloadCol, audioDHash,
+      maxHamming, maxBucket, chunkSize)
 
   /** Video NEAR-DUP pairs by frame-aligned perceptual hashing — the
     * video column's dedup verb, composed entirely from audited
@@ -570,60 +554,207 @@ object Multimodal {
       .select("id_a", "id_b", "n_match", "match_frac")
   }
 
-  /** SHIFT-TOLERANT video near-dup pairs — the documented trade of
-    * [[videoNearDupPairs]] made into its own operator: videos are
-    * paired on the OVERLAP OF THEIR SAMPLED-FRAME HASH SETS, frame
-    * index discarded, so trimmed intros, dropped leaders, and
-    * time-shifted re-cuts — which the frame-ALIGNED form must miss
-    * by design — still pair. The price is the set semantics: frame
-    * ORDER no longer witnesses (a shuffled re-cut of the same frames
-    * pairs at 1.0), and `n_match` counts distinct matched HASH
-    * values, not frame positions.
-    *
-    * Semantics: H(v) = the DISTINCT dHashes of v's sampled frames
-    * (every `stride`-th); n_match(a, b) = |{(x, y) ∈ H(a)×H(b) :
-    * hamming(x, y) ≤ maxHamming}|, which at the default
-    * maxHamming=0 is exactly |H(a) ∩ H(b)|; emit when
-    * n_match / min(|H(a)|, |H(b)|) ≥ `minFrac` (containment-style:
-    * a pure trim of a longer video scores 1.0). Shift tolerance is
-    * MODULO THE STRIDE — sampling every s-th frame detects only
-    * shifts ≡ 0 (mod s); run stride=1 when arbitrary one-frame
-    * shifts matter (the sampling frontier is cheap post one-pass:
-    * 72 wire samples per frame).
-    *
-    * Scale shape: the same one-walk [[graft.functions.AviFrameDHashes]]
-    * frontier, a distinct over narrow (id, hash) rows, then a
-    * hash-keyed equi-join (maxHamming=0) — or, for maxHamming>0, the
-    * near-equal hash-VALUE pairs come from the one audited
-    * [[Dedup.hammingBandPairs]] pigeonhole core over the DISTINCT
-    * hash values (a set that grows with content diversity, not
-    * corpus size) and are joined back symmetrically. Never
-    * all-pairs: a unit hash shared by more than `maxBucket` items
-    * (corpus-constant frames — black intros, slates) is dropped like
-    * a flood shingle BEFORE matching and sizing, so a constant-frame
-    * catalog cannot blow the hash-keyed join up quadratically.
-    * Output: (id_a, id_b, n_match, match_frac), id_a < id_b. */
-  def videoNearDupPairsShifted(
-      docs: DataFrame, idCol: String, payloadCol: String,
-      stride: Int, minFrac: Double = 0.5, maxHamming: Int = 0,
-      maxBucket: Int = 65536, chunkSize: Int = 1024): DataFrame = {
-    require(stride > 0, s"stride=$stride must be positive")
-    val hashes = docs
-      .select(col(idCol), col(payloadCol))
-      .repartition(Dedup.pinnedParts(docs)) // decode frontier spread
-      .select(col(idCol),
-        videoFrameDHashes(col(payloadCol), stride).as("__fh"))
-      .filter(col("__fh").isNotNull && size(col("__fh")) > 0)
-      .select(col(idCol), explode(col("__fh.dhash")).as("__dh"))
-    hashSetOverlapPairs(hashes, idCol, minFrac, maxHamming, maxBucket, chunkSize)
+  /** A media payload's UNIT fingerprints: `array<bigint>`, one 64-bit
+    * hash per sampled unit (video frame, shot, audio segment, sliding
+    * window), NULL when the payload cannot be decoded. The set-overlap
+    * verbs ([[setOverlapPairs]], [[dedupSetOverlap]],
+    * [[setOverlapIndex]], [[dedupAgainstSetOverlapIndex]],
+    * [[blockBitmaps]] and
+    * [[graft.streaming.StreamingOps.dropSetOverlapNearDups]]) take one
+    * of these and are otherwise kernel-agnostic. Built only by the
+    * factories of [[UnitHashes$]], each of which validates its kernel's
+    * arguments at construction — before any verb builds a plan or
+    * runs a job. */
+  final class UnitHashes private (kernel: Column => Column) extends (Column => Column) {
+    def apply(payload: Column): Column = kernel(payload)
   }
 
-  /** The hash-SET overlap pair core shared by
-    * [[videoNearDupPairsShifted]] and [[audioNearDupPairsShifted]]:
-    * `hashed` is (idCol, __dh) rows — one per (media item, sampled
-    * unit hash), duplicates allowed (a distinct is taken here).
-    * Emits (id_a, id_b, n_match, match_frac) per the set semantics
-    * documented on the video form. Validates BEFORE any job runs.
+  object UnitHashes {
+
+    /** Every `stride`-th frame's dHash ([[videoFrameDHashes]]: one
+      * container walk, AVI or animated GIF). Shift tolerance is
+      * MODULO THE STRIDE — sampling every s-th frame detects only
+      * shifts ≡ 0 (mod s); use stride 1 when arbitrary one-frame
+      * shifts matter (the frontier costs 72 wire samples per frame). */
+    def videoFrames(stride: Int): UnitHashes = {
+      require(stride > 0, s"stride=$stride must be positive")
+      new UnitHashes(videoFrameDHashes(_, stride).getField("dhash"))
+    }
+
+    /** One representative dHash per detected SHOT
+      * ([[videoShotFrameDHashes]], cut threshold `cutHamming` bits):
+      * re-cuts that stretch or shorten scenes keep the same hash set,
+      * where per-frame sets skew whenever scenes carry internal
+      * motion. */
+    def videoShots(cutHamming: Int = 16): UnitHashes = {
+      require(cutHamming >= 0 && cutHamming <= 64,
+        s"cutHamming=$cutHamming outside [0,64]")
+      new UnitHashes(videoShotFrameDHashes(_, cutHamming).getField("dhash"))
+    }
+
+    /** Fixed `segFrames`-frame segment envelope hashes
+      * ([[audioSegmentDHashes]]): a clip trimmed by whole segments,
+      * which moves every window of the whole-clip [[audioDHash]],
+      * keeps its surviving segments. Tolerance is modulo segFrames;
+      * gain invariance carries per segment. */
+    def audioSegments(segFrames: Int): UnitHashes = {
+      requireSegFrames(segFrames)
+      new UnitHashes(audioSegmentDHashes(_, segFrames).getField("dhash"))
+    }
+
+    /** TIME-based segment hashes ([[audioSegmentDHashesMs]], frames
+      * per segment derived per clip from the header rate): segment k
+      * covers the same span of the recording at every sample rate, so
+      * ideal resamples fingerprint identically (bit-exactly when the
+      * derived frame counts are 65-divisible; near-tie envelope bits
+      * otherwise, absorbed by `minFrac`), where frame-count segments
+      * of a rate-converted copy share no unit at ANY alignment. Clips
+      * whose derived segFrames falls under 65 yield no units. */
+    def audioSegmentsMs(msPerSeg: Int): UnitHashes = {
+      require(msPerSeg >= 1, s"msPerSeg=$msPerSeg must be >= 1")
+      new UnitHashes(audioSegmentDHashesMs(_, msPerSeg).getField("dhash"))
+    }
+
+    /** PROBE-SIDE ONLY: a `segFrames` window at every `hop`-th start
+      * frame ([[audioSlidingDHashes]]), for
+      * [[dedupAgainstSetOverlapIndex]] against an unchanged
+      * single-phase [[audioSegments]] index — only the increment pays
+      * the probe density. A trim by ANY offset t has a window at
+      * p = k·segFrames − t aligning with every full catalog segment
+      * (hop = 1; hop > 1 keeps trims ≡ 0 mod hop), and the denominator
+      * resolves to the index clip's set size: "how much of the
+      * historical clip appears in the new one". */
+    def audioSliding(segFrames: Int, hop: Int = 1): UnitHashes = {
+      requireSegFrames(segFrames)
+      require(hop >= 1, s"hop=$hop must be positive")
+      new UnitHashes(audioSlidingDHashes(_, segFrames, hop).getField("dhash"))
+    }
+
+    /** Segment hashes of an AVI's PCM soundtrack
+      * ([[videoAudioSegmentDHashes]]) — one envelope kernel with
+      * [[audioSegments]], so soundtrack segments hash identically to
+      * the same PCM in a WAV. NULL when the container carries no
+      * 16-bit PCM track. */
+    def videoSoundtrack(segFrames: Int): UnitHashes = {
+      requireSegFrames(segFrames)
+      new UnitHashes(videoAudioSegmentDHashes(_, segFrames).getField("dhash"))
+    }
+
+    /** A still image's [[imageDHash]] as a one-unit set — frame and
+      * still hashes share one kernel, so an image catalog's
+      * [[blockBitmaps]] gate a video stream's frames. */
+    val image: UnitHashes = new UnitHashes(p => {
+      val h = imageDHash(p)
+      when(h.isNotNull, array(h))
+    })
+
+    private def requireSegFrames(segFrames: Int): Unit =
+      require(segFrames >= 65,
+        s"segFrames=$segFrames must be >= 65 (one frame per envelope window)")
+  }
+
+  /** SET-OVERLAP near-dup pairs: items are paired on the overlap of
+    * their unit-hash sets (`fp`), unit position discarded, so trimmed
+    * intros, dropped leaders, time-shifted re-cuts and resamples —
+    * whichever axis the extractor tolerates — still pair. The price is
+    * the set semantics: unit ORDER no longer witnesses (a shuffled
+    * re-cut of the same frames pairs at 1.0), and `n_match` counts
+    * distinct matched HASH values, not positions.
+    *
+    * Semantics: H(v) = the DISTINCT unit hashes of v; n_match(a, b) =
+    * |{(x, y) ∈ H(a)×H(b) : hamming(x, y) ≤ maxHamming}|, which at the
+    * default maxHamming=0 is exactly |H(a) ∩ H(b)|; emit when
+    * n_match / min(|H(a)|, |H(b)|) ≥ `minFrac` (containment-style: a
+    * pure trim of a longer item scores 1.0).
+    *
+    * Scale shape: one decode per item, a distinct over narrow
+    * (id, hash) rows, then a hash-keyed equi-join (maxHamming=0) — or,
+    * for maxHamming>0, the near-equal hash-VALUE pairs come from the
+    * one audited [[Dedup.hammingBandPairs]] pigeonhole core over the
+    * DISTINCT hash values (a set that grows with content diversity,
+    * not corpus size) and are joined back symmetrically. Never
+    * all-pairs: a unit hash shared by more than `maxBucket` items
+    * (corpus-constant frames or segments — black intros, slates,
+    * silence) is dropped like a flood shingle BEFORE matching and
+    * sizing. Undecodable payloads sample no units and never pair.
+    * Output: (id_a, id_b, n_match, match_frac), id_a < id_b. */
+  def setOverlapPairs(
+      docs: DataFrame, idCol: String, payloadCol: String, fp: UnitHashes,
+      minFrac: Double = 0.5, maxHamming: Int = 0,
+      maxBucket: Int = 65536, chunkSize: Int = 1024): DataFrame =
+    hashSetOverlapPairs(unitHashRows(docs, idCol, payloadCol, fp, idCol, "__dh"),
+      idCol, minFrac, maxHamming, maxBucket, chunkSize)
+
+  /** Set-overlap DEDUP output: [[setOverlapPairs]] →
+    * [[Graph.connectedComponents]] → keep each cluster's smallest-id
+    * representative. Undecodable payloads never pair and are always
+    * kept. The decision rides only narrow id rows — payloads stay out
+    * of every shuffle until the final id-keyed anti join. */
+  def dedupSetOverlap(
+      docs: DataFrame, idCol: String, payloadCol: String, fp: UnitHashes,
+      minFrac: Double = 0.5, maxHamming: Int = 0,
+      maxBucket: Int = 65536, chunkSize: Int = 1024): DataFrame =
+    Dedup.dropLosers(docs, idCol,
+      setOverlapPairs(docs, idCol, payloadCol, fp, minFrac, maxHamming, maxBucket, chunkSize))
+
+  /** Portable set-overlap fingerprint INDEX: one row per (id, DISTINCT
+    * unit hash) — the artifact an incremental media dedup persists
+    * between crawls (8 bytes per distinct unit hash instead of
+    * re-decoding history): [[imageHashIndex]] generalized to the
+    * set-overlap family. Feed increments to
+    * [[dedupAgainstSetOverlapIndex]] with the same extractor (or, for
+    * an [[UnitHashes.audioSegments]] index, [[UnitHashes.audioSliding]]
+    * on the probe side). Undecodable payloads index nothing. */
+  def setOverlapIndex(
+      docs: DataFrame, idCol: String, payloadCol: String, fp: UnitHashes): DataFrame =
+    unitHashRows(docs, idCol, payloadCol, fp, "id", "dhash").distinct()
+
+  /** INCREMENTAL set-overlap dedup: keep the rows of `newDocs` whose
+    * unit-hash sets do NOT overlap any [[setOverlapIndex]] member at
+    * `minFrac` of min(|H(new)|, |H(old)|) — the growing-corpus shape
+    * ([[Dedup.dedupAgainstIndex]] / [[dedupImagesAgainstIndex]]
+    * discipline: the increment decodes once, history is 8-byte hash
+    * rows and is never re-decoded). Flood hashes (index membership >
+    * `maxBucket` — history is the side that grows) drop before
+    * matching and sizing. Intra-batch duplicates are out of scope —
+    * run [[dedupSetOverlap]] on the increment first. Undecodable
+    * payloads never match and are always kept. */
+  def dedupAgainstSetOverlapIndex(
+      newDocs: DataFrame, idCol: String, payloadCol: String, index: DataFrame,
+      fp: UnitHashes, minFrac: Double = 0.5,
+      maxBucket: Int = 65536, chunkSize: Int = 1024): DataFrame = {
+    requireSetOverlapArgs(minFrac, maxBucket, chunkSize)
+    val probe = unitHashRows(newDocs, idCol, payloadCol, fp, "__nid", "__dh").distinct()
+    newDocs.join(
+      setOverlapMatchesAgainstIndex(probe, index, minFrac, maxBucket, chunkSize,
+        excludeSameId = false)
+        .select(col("__nid").as(idCol)).distinct(),
+      Seq(idCol), "left_anti")
+  }
+
+  /** The unit-hash frontier of the set-overlap family: (idAs, hashAs)
+    * rows, one per (item, unit hash), duplicates kept — the
+    * [[hashRows]] decode with its array exploded; items with a
+    * NULL or empty unit set emit nothing. */
+  private def unitHashRows(
+      docs: DataFrame, idCol: String, payloadCol: String, fp: UnitHashes,
+      idAs: String, hashAs: String): DataFrame =
+    hashRows(docs, idCol, payloadCol, fp, idAs, "__uh")
+      .filter(size(col("__uh")) > 0)
+      .select(col(idAs), explode(col("__uh")).as(hashAs))
+
+  private def requireSetOverlapArgs(minFrac: Double, maxBucket: Int, chunkSize: Int): Unit = {
+    require(minFrac > 0 && minFrac <= 1, s"minFrac=$minFrac outside (0,1]")
+    require(maxBucket > 1, s"maxBucket=$maxBucket must exceed 1")
+    require(chunkSize > 0, s"chunkSize=$chunkSize must be positive")
+  }
+
+  /** The hash-SET overlap pair core of [[setOverlapPairs]] and the
+    * media curation report: `hashed` is (idCol, __dh) rows — one per
+    * (media item, sampled unit hash), duplicates allowed (a distinct
+    * is taken here). Emits (id_a, id_b, n_match, match_frac) per the
+    * set semantics documented on [[setOverlapPairs]]. Validates
+    * BEFORE any job runs.
     *
     * Flood-hash STRAGGLER control (beyond the `maxBucket` drop): a
     * unit hash shared by n ≤ maxBucket items still emits O(n²) rows,
@@ -664,8 +795,7 @@ object Multimodal {
   private def hashSetOverlapPairs(
       hashed: DataFrame, idCol: String, minFrac: Double,
       maxHamming: Int, maxBucket: Int, chunkSize: Int): DataFrame = {
-    require(minFrac > 0 && minFrac <= 1, s"minFrac=$minFrac outside (0,1]")
-    require(maxBucket > 1, s"maxBucket=$maxBucket must exceed 1")
+    requireSetOverlapArgs(minFrac, maxBucket, chunkSize)
     Dedup.requireHammingArgs(maxHamming, chunkSize) // before the decode job
     val all = hashed.distinct()
     // FLOOD-HASH cap — the family's maxBucket discipline applied to
@@ -732,11 +862,7 @@ object Multimodal {
       col("__k").as("__ka"), col("__k").as("__kb"))
     val matches = {
         val sig = hashStats
-          .select(
-            col("__dh").as("id") +:
-              (0 until 4).map(b =>
-                shiftrightunsigned(col("__dh"), 48 - 16 * b)
-                  .bitwiseAND(lit(0xFFFFL)).cast("int").as(s"__b$b")): _*)
+          .select(col("__dh").as("id") +: namedBlocks(col("__dh")): _*)
           .localCheckpoint(true)
         val near = Dedup.hammingBandPairs(sig, maxHamming, maxBucket, chunkSize)
           .select(col("id_a").as("__ha"), col("id_b").as("__hb"))
@@ -793,35 +919,6 @@ object Multimodal {
   def audioSegmentStats(payload: Column, segFrames: Int): Column =
     graft.functions.GraftFunctions.audioSegmentStats(payload, lit(segFrames))
 
-  /** SHIFT-TOLERANT audio near-dup pairs — [[videoNearDupPairsShifted]]
-    * for the audio column: clips are paired on the OVERLAP OF THEIR
-    * SEGMENT-HASH SETS ([[audioSegmentDHashes]], fixed `segFrames`
-    * slices), so a clip whose leading k·segFrames frames were trimmed
-    * — which moves EVERY window of the whole-clip envelope hash and
-    * defeats [[audioNearDupPairs]] — still pairs on its surviving
-    * segments. Tolerance is modulo segFrames (the video form's stride
-    * caveat on the time axis); gain invariance carries per segment.
-    * Same set semantics as the video form: n_match over distinct
-    * matched hash values, frac against min(|H(a)|, |H(b)|)
-    * (containment: a pure trim of a longer clip scores 1.0), optional
-    * maxHamming through the shared pigeonhole core. Undecodable or
-    * sub-65-frame payloads sample no segments and never pair.
-    * Output: (id_a, id_b, n_match, match_frac), id_a < id_b. */
-  def audioNearDupPairsShifted(
-      docs: DataFrame, idCol: String, payloadCol: String,
-      segFrames: Int, minFrac: Double = 0.5, maxHamming: Int = 0,
-      maxBucket: Int = 65536, chunkSize: Int = 1024): DataFrame = {
-    require(segFrames >= 65, s"segFrames=$segFrames must be >= 65 (one frame per envelope window)")
-    val hashes = docs
-      .select(col(idCol), col(payloadCol))
-      .repartition(Dedup.pinnedParts(docs)) // decode frontier spread
-      .select(col(idCol),
-        audioSegmentDHashes(col(payloadCol), segFrames).as("__sh"))
-      .filter(col("__sh").isNotNull && size(col("__sh")) > 0)
-      .select(col(idCol), explode(col("__sh.dhash")).as("__dh"))
-    hashSetOverlapPairs(hashes, idCol, minFrac, maxHamming, maxBucket, chunkSize)
-  }
-
   /** TIME-based segment fingerprints — [[audioSegmentDHashes]] with
     * the segment length in MILLISECONDS, frames derived per clip
     * from the decoded header rate
@@ -829,110 +926,6 @@ object Multimodal {
     * sample-rate-tolerant fingerprint frontier. */
   def audioSegmentDHashesMs(payload: Column, ms: Int): Column =
     graft.functions.GraftFunctions.audioSegmentDHashesMs(payload, lit(ms))
-
-  /** SAMPLE-RATE-TOLERANT audio near-dup pairs — closes the hole
-    * neither [[audioNearDupPairsShifted]] nor
-    * [[audioNearDupPairsOffset]] covers: a 44.1→48 kHz (or any
-    * rate-converted) re-encode of a clip changes frames-per-second,
-    * so FRAME-count segmentation puts different audio in every
-    * segment at the two rates and no unit hash survives at ANY
-    * alignment — containment reads 0, not reduced. Segmenting by
-    * TIME ([[audioSegmentDHashesMs]]) makes segment k cover the same
-    * span of the recording at every rate, so ideal resamples
-    * fingerprint identically (bit-exactly when the derived frame
-    * counts are 65-divisible — see the expression's exactness
-    * contract; near-tie envelope bits otherwise, absorbed by the
-    * same `minFrac` set-overlap gate every media family uses). Gain
-    * invariance carries per segment as everywhere.
-    *
-    * Same set semantics and scale shape as the shifted form: one
-    * decode per clip, narrow (id, hash) rows into the shared
-    * [[hashSetOverlapPairs]] core (value-bucketed, flood-capped,
-    * chunk-cell identity join — never all-pairs); n_match over
-    * distinct matched hash values, frac against min(|H(a)|, |H(b)|).
-    * Tolerance axes COMPOSE by construction: rate conversion is
-    * handled here, segment-multiple trims by the shifted form,
-    * arbitrary trims by the offset probe — one kernel, three
-    * frontiers. Undecodable payloads and clips whose derived
-    * segFrames falls under 65 sample no segments and never pair.
-    * Output: (id_a, id_b, n_match, match_frac), id_a < id_b. */
-  def audioNearDupPairsResampled(
-      docs: DataFrame, idCol: String, payloadCol: String,
-      msPerSeg: Int, minFrac: Double = 0.5, maxHamming: Int = 0,
-      maxBucket: Int = 65536, chunkSize: Int = 1024): DataFrame = {
-    require(msPerSeg >= 1, s"msPerSeg=$msPerSeg must be >= 1")
-    val hashes = docs
-      .select(col(idCol), col(payloadCol))
-      .repartition(Dedup.pinnedParts(docs)) // decode frontier spread
-      .select(col(idCol),
-        audioSegmentDHashesMs(col(payloadCol), msPerSeg).as("__sh"))
-      .filter(col("__sh").isNotNull && size(col("__sh")) > 0)
-      .select(col(idCol), explode(col("__sh.dhash")).as("__dh"))
-    hashSetOverlapPairs(hashes, idCol, minFrac, maxHamming, maxBucket, chunkSize)
-  }
-
-  /** DEDUP OUTPUT for the sample-rate-tolerant pairs — the decision
-    * [[audioNearDupPairsResampled]] feeds, same shape as
-    * [[dedupAudioNearDupsShifted]]: pairs → contraction CC →
-    * smallest-id representative; undecodable payloads and clips
-    * whose derived segFrames falls under 65 never pair, so they are
-    * always kept. */
-  def dedupAudioNearDupsResampled(
-      docs: DataFrame, idCol: String, payloadCol: String,
-      msPerSeg: Int, minFrac: Double = 0.5, maxHamming: Int = 0,
-      maxBucket: Int = 65536, chunkSize: Int = 1024): DataFrame = {
-    val pairs = audioNearDupPairsResampled(
-      docs, idCol, payloadCol, msPerSeg, minFrac, maxHamming, maxBucket, chunkSize)
-    Dedup.dropLosers(docs, idCol, pairs)
-  }
-
-  /** Persisted TIME-based audio fingerprint index — one row per
-    * (id, DISTINCT ms-segment hash), the [[audioSegmentHashIndex]]
-    * artifact for the sample-rate-tolerant axis: history persists as
-    * 8-byte hash rows keyed by the same time units at every rate, so
-    * a later rate-converted re-encode still probes the same keys. */
-  def audioSegmentHashIndexMs(
-      docs: DataFrame, idCol: String, payloadCol: String, msPerSeg: Int): DataFrame = {
-    require(msPerSeg >= 1, s"msPerSeg=$msPerSeg must be >= 1")
-    docs
-      .select(col(idCol), col(payloadCol))
-      .repartition(Dedup.pinnedParts(docs)) // decode frontier spread
-      .select(col(idCol).as("id"),
-        audioSegmentDHashesMs(col(payloadCol), msPerSeg).as("__sh"))
-      .filter(col("__sh").isNotNull && size(col("__sh")) > 0)
-      .select(col("id"), explode(col("__sh.dhash")).as("dhash"))
-      .distinct()
-  }
-
-  /** INCREMENTAL sample-rate-tolerant dedup vs a persisted
-    * [[audioSegmentHashIndexMs]] — [[dedupAudioAgainstIndex]] for the
-    * rate axis: a 16 kHz (or any rate-converted) re-encode of a clip
-    * the history holds at 8 kHz drops WITHOUT re-decoding history,
-    * the case the frame-count index form structurally keeps (its
-    * fixed-frame segments cover different audio at the new rate).
-    * Same incremental set-overlap core, flood caps, and
-    * sub-65/undecodable keep semantics. */
-  def dedupAudioAgainstIndexMs(
-      newDocs: DataFrame, idCol: String, payloadCol: String, index: DataFrame,
-      msPerSeg: Int, minFrac: Double = 0.5,
-      maxBucket: Int = 65536, chunkSize: Int = 1024): DataFrame = {
-    require(msPerSeg >= 1, s"msPerSeg=$msPerSeg must be >= 1")
-    require(minFrac > 0 && minFrac <= 1, s"minFrac=$minFrac outside (0,1]")
-    require(maxBucket > 1, s"maxBucket=$maxBucket must exceed 1")
-    require(chunkSize > 0, s"chunkSize=$chunkSize must be positive")
-    val probe = newDocs
-      .select(col(idCol), col(payloadCol))
-      .repartition(Dedup.pinnedParts(newDocs))
-      .select(col(idCol).as("__nid"),
-        audioSegmentDHashesMs(col(payloadCol), msPerSeg).as("__sh"))
-      .filter(col("__sh").isNotNull && size(col("__sh")) > 0)
-      .select(col("__nid"), explode(col("__sh.dhash")).as("__dh"))
-      .distinct()
-    newDocs.join(
-      setOverlapIdsAgainstIndex(probe, index, idCol,
-        minFrac, maxBucket, chunkSize, excludeSameId = false),
-      Seq(idCol), "left_anti")
-  }
 
   /** SLIDING-window audio fingerprints:
     * array<struct<offset:int, dhash:long>> — one envelope hash per
@@ -945,14 +938,14 @@ object Multimodal {
       payload, lit(segFrames), lit(hop))
 
   /** ARBITRARY-OFFSET audio near-dup pairs — closes the documented
-    * hole in [[audioNearDupPairsShifted]]: its fixed-phase
+    * hole in [[UnitHashes.audioSegments]] set overlap: its fixed-phase
     * segmentation tolerates trims only at segFrames MULTIPLES (a
     * 37-frame trim shifts every window, NO unit hash survives,
     * containment reads 0 — not reduced). Here every clip is hashed
     * TWICE from one decode frontier: as a single-phase CATALOG
     * (full `segFrames` segments at offsets k·segFrames — unchanged
     * index-side semantics, so the per-clip fingerprint footprint a
-    * catalog persists stays [[audioSegmentHashIndex]]-sized) and as
+    * catalog persists stays [[setOverlapIndex]]-sized) and as
     * a DENSE PROBE ([[audioSlidingDHashes]], a window at every
     * `hop`-th start frame). A probe window starting at p matches
     * catalog segment k of another clip iff the underlying samples
@@ -1068,51 +1061,14 @@ object Multimodal {
   private def prbFJoin(prb: DataFrame, cat: DataFrame): DataFrame =
     prb.join(cat.hint("shuffle_hash"), Seq("__dh"))
 
-  /** INCREMENTAL audio dedup with ARBITRARY-offset tolerance —
-    * [[dedupAudioAgainstIndex]] with the increment probed by its
-    * DENSE sliding hash set ([[audioSlidingDHashes]], hop = 1 for
-    * full tolerance) instead of single-phase segments. The persisted
-    * [[audioSegmentHashIndex]] is UNCHANGED — the catalog side stays
-    * single-phase, so index size and history cost don't move; only
-    * the increment pays the probe density. Set-overlap semantics
-    * against frozen history: the denominator min(|H(new)|, |H(old)|)
-    * resolves to the INDEX clip's hash-set size (the sliding set is
-    * far larger by construction), so the fraction reads "how much of
-    * the historical clip appears in the new one" — a new clip that
-    * is a trim of an indexed clip matches every full catalog segment
-    * regardless of the trim's offset. */
-  def dedupAudioAgainstIndexOffset(
-      newDocs: DataFrame, idCol: String, payloadCol: String, index: DataFrame,
-      segFrames: Int, hop: Int = 1, minFrac: Double = 0.5,
-      maxBucket: Int = 65536, chunkSize: Int = 1024): DataFrame = {
-    require(segFrames >= 65,
-      s"segFrames=$segFrames must be >= 65 (one frame per envelope window)")
-    require(hop >= 1, s"hop=$hop must be positive")
-    require(minFrac > 0 && minFrac <= 1, s"minFrac=$minFrac outside (0,1]")
-    require(maxBucket > 1, s"maxBucket=$maxBucket must exceed 1")
-    require(chunkSize > 0, s"chunkSize=$chunkSize must be positive")
-    val probe = newDocs
-      .select(col(idCol), col(payloadCol))
-      .repartition(Dedup.pinnedParts(newDocs))
-      .select(col(idCol).as("__nid"),
-        audioSlidingDHashes(col(payloadCol), segFrames, hop).as("__sw"))
-      .filter(col("__sw").isNotNull && size(col("__sw")) > 0)
-      .select(col("__nid"), explode(col("__sw.dhash")).as("__dh"))
-      .distinct()
-    newDocs.join(
-      setOverlapIdsAgainstIndex(probe, index, idCol,
-        minFrac, maxBucket, chunkSize, excludeSameId = false),
-      Seq(idCol), "left_anti")
-  }
-
   /** Video near-dup DEDUP output — [[dedupImageNearDups]] for the
     * video column: [[videoNearDupPairs]] (frame-aligned) →
     * [[Graph.connectedComponents]] → keep each cluster's smallest-id
     * representative; undecodable payloads can't pair and are always
     * kept. Same scale shape: the payload never rides a shuffle on
     * the dedup decision (pairs are narrow id rows, the final anti
-    * join is id-keyed). Use [[videoNearDupPairsShifted]]-derived
-    * pairs + the same CC manually when trims must also collapse. */
+    * join is id-keyed). Use [[dedupSetOverlap]] with
+    * [[UnitHashes.videoFrames]] when trims must also collapse. */
   def dedupVideoNearDups(
       docs: DataFrame, idCol: String, payloadCol: String,
       stride: Int, minFrac: Double = 0.5): DataFrame = {
@@ -1127,37 +1083,6 @@ object Multimodal {
       docs: DataFrame, idCol: String, payloadCol: String,
       maxHamming: Int = 3, maxBucket: Int = 65536, chunkSize: Int = 256): DataFrame = {
     val pairs = audioNearDupPairs(docs, idCol, payloadCol, maxHamming, maxBucket, chunkSize)
-    Dedup.dropLosers(docs, idCol, pairs)
-  }
-
-  /** SHIFT-TOLERANT video dedup output — [[dedupVideoNearDups]] with
-    * [[videoNearDupPairsShifted]] pairs, so trimmed intros / dropped
-    * leaders / re-cuts collapse into one representative too (the
-    * frame-aligned form keeps every trim by design). Pairs → CC →
-    * smallest-id representative; undecodable payloads sample no
-    * frames, never pair, always kept. The dedup DECISION rides only
-    * narrow id rows — payloads stay out of every shuffle until the
-    * final id-keyed anti join, the family's scale invariant. */
-  def dedupVideoNearDupsShifted(
-      docs: DataFrame, idCol: String, payloadCol: String,
-      stride: Int, minFrac: Double = 0.5, maxHamming: Int = 0,
-      maxBucket: Int = 65536, chunkSize: Int = 1024): DataFrame = {
-    val pairs = videoNearDupPairsShifted(
-      docs, idCol, payloadCol, stride, minFrac, maxHamming, maxBucket, chunkSize)
-    Dedup.dropLosers(docs, idCol, pairs)
-  }
-
-  /** SHIFT-TOLERANT audio dedup output — [[dedupAudioNearDups]] with
-    * [[audioNearDupPairsShifted]] segment-set pairs: a clip trimmed
-    * by whole segments (and/or gain-rescaled) collapses onto its
-    * source, which the whole-clip envelope hash misses by design.
-    * Undecodable / sub-65-frame clips never pair, always kept. */
-  def dedupAudioNearDupsShifted(
-      docs: DataFrame, idCol: String, payloadCol: String,
-      segFrames: Int, minFrac: Double = 0.5, maxHamming: Int = 0,
-      maxBucket: Int = 65536, chunkSize: Int = 1024): DataFrame = {
-    val pairs = audioNearDupPairsShifted(
-      docs, idCol, payloadCol, segFrames, minFrac, maxHamming, maxBucket, chunkSize)
     Dedup.dropLosers(docs, idCol, pairs)
   }
 
@@ -1210,9 +1135,7 @@ object Multimodal {
     require(chunkSize > 0, s"chunkSize=$chunkSize must be positive")
     require(maxHamming >= 0 && maxHamming <= 3, // before decode jobs
       s"maxHamming=$maxHamming outside [0,3]: 4-block pigeonhole is lossless only to 3")
-    def blocks(h: Column): Column = array((0 until 4).map(b =>
-      shiftrightunsigned(h, 48 - 16 * b)
-        .bitwiseAND(lit(0xFFFFL)).cast("int")): _*)
+    def blocks(h: Column): Column = array(hashBlocks(h): _*)
     val vf = videos
       .select(col(vidIdCol), col(vidPayloadCol))
       .repartition(Dedup.pinnedParts(videos)) // decode frontier spread
@@ -1222,11 +1145,7 @@ object Multimodal {
       .select(col(vidIdCol), explode(col("__fh")).as("__e"))
       .select(col(vidIdCol), col("__e.frame_idx").as("frame_idx"),
         col("__e.dhash").as("__dhv"))
-    val ih = images
-      .select(col(imgIdCol), col(imgPayloadCol))
-      .repartition(Dedup.pinnedParts(images))
-      .select(col(imgIdCol), imageDHash(col(imgPayloadCol)).as("__dhi"))
-      .filter(col("__dhi").isNotNull)
+    val ih = hashRows(images, imgIdCol, imgPayloadCol, imageDHash, imgIdCol, "__dhi")
     val vb = vf.select(col(vidIdCol), col("frame_idx"), col("__dhv"),
       posexplode(blocks(col("__dhv"))).as(Seq("__band", "__bv")))
     val ib0 = ih.select(col(imgIdCol), col("__dhi"),
@@ -1265,66 +1184,19 @@ object Multimodal {
       .distinct()
   }
 
-  /** Portable VIDEO fingerprint index: one row per (id, DISTINCT
-    * sampled-frame dHash) — the artifact an incremental
-    * shift-tolerant video dedup persists between crawls (8 bytes per
-    * distinct frame hash vs re-walking every historical container):
-    * [[imageHashIndex]] generalized to the set-overlap family. Feed
-    * increments to [[dedupVideosAgainstIndex]]. */
-  def videoFrameHashIndex(
-      docs: DataFrame, idCol: String, payloadCol: String, stride: Int): DataFrame = {
-    require(stride > 0, s"stride=$stride must be positive")
-    docs
-      .select(col(idCol), col(payloadCol))
-      .repartition(Dedup.pinnedParts(docs)) // container-walk frontier spread
-      .select(col(idCol).as("id"),
-        videoFrameDHashes(col(payloadCol), stride).as("__fh"))
-      .filter(col("__fh").isNotNull && size(col("__fh")) > 0)
-      .select(col("id"), explode(col("__fh.dhash")).as("dhash"))
-      .distinct()
-  }
-
-  /** Portable AUDIO fingerprint index: one row per (id, DISTINCT
-    * segment envelope hash) — [[videoFrameHashIndex]] for the audio
-    * column. */
-  def audioSegmentHashIndex(
-      docs: DataFrame, idCol: String, payloadCol: String, segFrames: Int): DataFrame = {
-    require(segFrames >= 65,
-      s"segFrames=$segFrames must be >= 65 (one frame per envelope window)")
-    docs
-      .select(col(idCol), col(payloadCol))
-      .repartition(Dedup.pinnedParts(docs)) // decode frontier spread
-      .select(col(idCol).as("id"),
-        audioSegmentDHashes(col(payloadCol), segFrames).as("__sh"))
-      .filter(col("__sh").isNotNull && size(col("__sh")) > 0)
-      .select(col("id"), explode(col("__sh.dhash")).as("dhash"))
-      .distinct()
-  }
-
-  /** The shared INCREMENTAL set-overlap matcher behind
-    * [[dedupVideosAgainstIndex]]/[[dedupAudioAgainstIndex]]: `probe`
-    * is the increment's (idCol, __dh) distinct hash rows (decoded
-    * once), `index` a persisted (id, dhash) fingerprint table —
-    * history payloads never re-read. A new item matches an index
-    * member when their DISTINCT-hash overlap clears `minFrac` of
-    * min(|H(new)|, |H(old)|) — the [[hashSetOverlapPairs]] semantics
-    * against frozen history. Flood hashes (index membership >
-    * `maxBucket` — history is the side that grows) drop before
-    * matching AND sizing; survivors join through the two-sided
-    * chunk-cell expansion. `excludeSameId` spares changed items from
-    * matching their own previous version. Returns distinct matched
-    * increment ids. */
-  private def setOverlapIdsAgainstIndex(
-      probe: DataFrame, index: DataFrame, idCol: String,
-      minFrac: Double, maxBucket: Int, chunkSize: Int,
-      excludeSameId: Boolean): DataFrame =
-    setOverlapMatchesAgainstIndex(probe, index, minFrac, maxBucket, chunkSize,
-      excludeSameId)
-      .select(col("__nid").as(idCol)).distinct()
-
-  /** The (increment id, index id) MATCH pairs behind
-    * [[setOverlapIdsAgainstIndex]] — same semantics, both ids kept
-    * (the incremental curation report's `dup_of` provenance). */
+  /** The shared INCREMENTAL set-overlap matcher of
+    * [[dedupAgainstSetOverlapIndex]] and the incremental media
+    * curation report: `probe` is the increment's (__nid, __dh)
+    * distinct hash rows (decoded once), `index` a persisted
+    * (id, dhash) fingerprint table — history payloads never re-read.
+    * A new item matches an index member when their DISTINCT-hash
+    * overlap clears `minFrac` of min(|H(new)|, |H(old)|) — the
+    * [[hashSetOverlapPairs]] semantics against frozen history. Flood
+    * hashes (index membership > `maxBucket` — history is the side
+    * that grows) drop before matching AND sizing; survivors join
+    * through the two-sided chunk-cell expansion. `excludeSameId`
+    * spares changed items from matching their own previous version.
+    * Returns the (__nid, __oid) match pairs (`dup_of` provenance). */
   private def setOverlapMatchesAgainstIndex(
       probe: DataFrame, index: DataFrame,
       minFrac: Double, maxBucket: Int, chunkSize: Int,
@@ -1375,63 +1247,6 @@ object Multimodal {
       .select(col("__nid"), col("__oid"))
   }
 
-  /** INCREMENTAL shift-tolerant VIDEO dedup: keep the rows of
-    * `newDocs` whose sampled-frame hash sets do NOT overlap any
-    * [[videoFrameHashIndex]] member at `minFrac` — the growing-corpus
-    * production shape for the video column ([[Dedup.dedupAgainstIndex]]
-    * / [[dedupImagesAgainstIndex]] discipline: the increment decodes
-    * once, history is 8-byte hash rows). Trims, re-cuts, and
-    * brightness re-encodes of historical videos drop; undecodable
-    * payloads never match and are always kept. */
-  def dedupVideosAgainstIndex(
-      newDocs: DataFrame, idCol: String, payloadCol: String, index: DataFrame,
-      stride: Int, minFrac: Double = 0.5,
-      maxBucket: Int = 65536, chunkSize: Int = 1024): DataFrame = {
-    require(stride > 0, s"stride=$stride must be positive")
-    require(minFrac > 0 && minFrac <= 1, s"minFrac=$minFrac outside (0,1]")
-    require(maxBucket > 1, s"maxBucket=$maxBucket must exceed 1")
-    require(chunkSize > 0, s"chunkSize=$chunkSize must be positive")
-    val probe = newDocs
-      .select(col(idCol), col(payloadCol))
-      .repartition(Dedup.pinnedParts(newDocs))
-      .select(col(idCol).as("__nid"),
-        videoFrameDHashes(col(payloadCol), stride).as("__fh"))
-      .filter(col("__fh").isNotNull && size(col("__fh")) > 0)
-      .select(col("__nid"), explode(col("__fh.dhash")).as("__dh"))
-      .distinct()
-    newDocs.join(
-      setOverlapIdsAgainstIndex(probe, index, idCol,
-        minFrac, maxBucket, chunkSize, excludeSameId = false),
-      Seq(idCol), "left_anti")
-  }
-
-  /** INCREMENTAL shift-tolerant AUDIO dedup — [[dedupVideosAgainstIndex]]
-    * for the audio column against an [[audioSegmentHashIndex]]:
-    * segment-trimmed / gain-rescaled / ADPCM-re-encoded copies of
-    * historical clips drop without re-decoding history. */
-  def dedupAudioAgainstIndex(
-      newDocs: DataFrame, idCol: String, payloadCol: String, index: DataFrame,
-      segFrames: Int, minFrac: Double = 0.5,
-      maxBucket: Int = 65536, chunkSize: Int = 1024): DataFrame = {
-    require(segFrames >= 65,
-      s"segFrames=$segFrames must be >= 65 (one frame per envelope window)")
-    require(minFrac > 0 && minFrac <= 1, s"minFrac=$minFrac outside (0,1]")
-    require(maxBucket > 1, s"maxBucket=$maxBucket must exceed 1")
-    require(chunkSize > 0, s"chunkSize=$chunkSize must be positive")
-    val probe = newDocs
-      .select(col(idCol), col(payloadCol))
-      .repartition(Dedup.pinnedParts(newDocs))
-      .select(col(idCol).as("__nid"),
-        audioSegmentDHashes(col(payloadCol), segFrames).as("__sh"))
-      .filter(col("__sh").isNotNull && size(col("__sh")) > 0)
-      .select(col("__nid"), explode(col("__sh.dhash")).as("__dh"))
-      .distinct()
-    newDocs.join(
-      setOverlapIdsAgainstIndex(probe, index, idCol,
-        minFrac, maxBucket, chunkSize, excludeSameId = false),
-      Seq(idCol), "left_anti")
-  }
-
   /** CROSS-MODAL containment search, audio edition — find catalog
     * AUDIO CLIPS appearing inside videos' PCM soundtracks:
     * (video_id, clip_id, n_match, match_frac) where match_frac is
@@ -1458,26 +1273,11 @@ object Multimodal {
       clips: DataFrame, clipIdCol: String, clipPayloadCol: String,
       segFrames: Int, minFrac: Double = 0.5,
       maxBucket: Int = 65536, chunkSize: Int = 1024): DataFrame = {
-    require(segFrames >= 65,
-      s"segFrames=$segFrames must be >= 65 (one frame per envelope window)")
-    require(minFrac > 0 && minFrac <= 1, s"minFrac=$minFrac outside (0,1]")
-    require(maxBucket > 1, s"maxBucket=$maxBucket must exceed 1")
-    require(chunkSize > 0, s"chunkSize=$chunkSize must be positive")
-    val va = videos
-      .select(col(vidIdCol), col(vidPayloadCol))
-      .repartition(Dedup.pinnedParts(videos)) // container-walk frontier spread
-      .select(col(vidIdCol).as("__vid"),
-        videoAudioSegmentDHashes(col(vidPayloadCol), segFrames).as("__sh"))
-      .filter(col("__sh").isNotNull && size(col("__sh")) > 0)
-      .select(col("__vid"), explode(col("__sh.dhash")).as("__dh"))
-      .distinct()
-    val ca = clips
-      .select(col(clipIdCol), col(clipPayloadCol))
-      .repartition(Dedup.pinnedParts(clips)) // decode frontier spread
-      .select(col(clipIdCol).as("__cid"),
-        audioSegmentDHashes(col(clipPayloadCol), segFrames).as("__sh"))
-      .filter(col("__sh").isNotNull && size(col("__sh")) > 0)
-      .select(col("__cid"), explode(col("__sh.dhash")).as("__dh"))
+    val track = UnitHashes.videoSoundtrack(segFrames)
+    val segs = UnitHashes.audioSegments(segFrames)
+    requireSetOverlapArgs(minFrac, maxBucket, chunkSize)
+    val va = unitHashRows(videos, vidIdCol, vidPayloadCol, track, "__vid", "__dh").distinct()
+    val ca = unitHashRows(clips, clipIdCol, clipPayloadCol, segs, "__cid", "__dh")
     // flood cap on EITHER side, dropped before matching AND sizing
     // so containment fractions stay internally consistent
     val flood = va.groupBy("__dh").agg(count(lit(1)).as("__n"))
@@ -1580,10 +1380,10 @@ object Multimodal {
           .when(col("kind") === "wav", "audio")
           .otherwise("other"))
       .withColumn("__idh", when(col("fam") === "image", imageDHash(p)))
-      .withColumn("__vfh", when(col("fam") === "video",
-        videoFrameDHashes(p, videoStride).getField("dhash")))
-      .withColumn("__ash", when(col("fam") === "audio",
-        audioSegmentDHashes(p, audioSegFrames).getField("dhash")))
+      .withColumn("__vfh",
+        when(col("fam") === "video", UnitHashes.videoFrames(videoStride)(p)))
+      .withColumn("__ash",
+        when(col("fam") === "audio", UnitHashes.audioSegments(audioSegFrames)(p)))
       .select(col(idCol), col("kind"), col("fam"),
         col("__idh"), col("__vfh"), col("__ash"))
       .localCheckpoint(true)
@@ -1603,11 +1403,7 @@ object Multimodal {
         .select(col("node").as(idCol), col("component").as("dup_of"),
           lit(reason).as("__reason"))
     val imgSig = fp.filter(col("__idh").isNotNull)
-      .select(
-        col(idCol).as("id") +:
-          (0 until 4).map(b =>
-            shiftrightunsigned(col("__idh"), 48 - 16 * b)
-              .bitwiseAND(lit(0xFFFFL)).cast("int").as(s"__b$b")): _*)
+      .select(col(idCol).as("id") +: namedBlocks(col("__idh")): _*)
       .localCheckpoint(true)
     val vidHashes = fp.filter(col("__vfh").isNotNull && size(col("__vfh")) > 0)
       .select(col(idCol), explode(col("__vfh")).as("__dh"))
@@ -1657,7 +1453,7 @@ object Multimodal {
     * run N's verdict rows VERBATIM; only the delta (added or changed
     * payloads) decodes, and it is judged against history through the
     * three persisted fingerprint indexes ([[imageHashIndex]] /
-    * [[videoFrameHashIndex]] / [[audioSegmentHashIndex]]) — history
+    * [[setOverlapIndex]] of frames / of audio segments) — history
     * payloads are NEVER re-decoded.
     *
     * THE INCREMENTAL CONTRACT (the text form's, verbatim): history is
@@ -1805,8 +1601,8 @@ object Multimodal {
 
   /** Build the 4×65,536-bit block bitmaps of a 64-bit-hash column —
     * the catalog artifact of the streaming trim-tolerant gates
-    * ([[graft.streaming.StreamingOps.dropAudioNearDupsShifted]] /
-    * `dropVideoNearDupsShifted`). `hashes` is a single LONG column
+    * ([[graft.streaming.StreamingOps.dropSetOverlapNearDups]], built
+    * by [[blockBitmaps]]). `hashes` is a single LONG column
     * of unit fingerprints (segment or frame hashes). The collect is
     * BOUNDED BY CONSTRUCTION: the distinct (band, block) set is
     * ≤262,144 rows no matter how many hashes feed it (the
@@ -1819,9 +1615,7 @@ object Multimodal {
     val h = col(hashes.columns.head)
     val blocks = hashes
       .filter(h.isNotNull)
-      .select(posexplode(array((0 until 4).map(b =>
-        shiftrightunsigned(h, 48 - 16 * b)
-          .bitwiseAND(lit(0xFFFFL)).cast("int")): _*)).as(Seq("band", "bv")))
+      .select(posexplode(array(hashBlocks(h): _*)).as(Seq("band", "bv")))
       .distinct()
       .collect()
     val maps = Array.fill(4)(new Array[Long](1024))
@@ -1832,41 +1626,17 @@ object Multimodal {
     maps
   }
 
-  /** [[segmentBlockBitmaps]] over a WAV corpus's SEGMENT hashes. */
-  def audioSegmentBlockBitmaps(
-      docs: DataFrame, payloadCol: String, segFrames: Int): Array[Array[Long]] =
-    segmentBlockBitmaps(docs.select(
-      explode(audioSegmentDHashes(col(payloadCol), segFrames)
-        .getField("dhash")).as("__dh")))
-
-  /** [[segmentBlockBitmaps]] over TIME-based (ms) segment hashes —
-    * the rate-tolerant catalog artifact: clips recorded into the
-    * catalog at ANY sample rate set the same blocks a re-encode at
-    * any OTHER rate probes, because the hashes are keyed by time
-    * units ([[audioSegmentDHashesMs]]). Same 32 KB bound. */
-  def audioSegmentBlockBitmapsMs(
-      docs: DataFrame, payloadCol: String, msPerSeg: Int): Array[Array[Long]] =
-    segmentBlockBitmaps(docs.select(
-      explode(audioSegmentDHashesMs(col(payloadCol), msPerSeg)
-        .getField("dhash")).as("__dh")))
-
-  /** [[segmentBlockBitmaps]] over an AVI corpus's FRAME hashes. */
-  def videoFrameBlockBitmaps(
-      docs: DataFrame, payloadCol: String, stride: Int): Array[Array[Long]] =
-    segmentBlockBitmaps(docs.select(
-      explode(videoFrameDHashes(col(payloadCol), stride)
-        .getField("dhash")).as("__dh")))
-
-  /** [[segmentBlockBitmaps]] over a STILL-IMAGE catalog's dHashes —
-    * frame and still hashes share one kernel ([[videoImageMatches]]'s
-    * exactness argument), so feeding THIS artifact to
-    * [[graft.streaming.StreamingOps.dropVideoNearDupsShifted]] gates a
-    * video stream against an IMAGE catalog: drop clips where ≥minFrac
-    * of sampled frames match a banned still — the streaming form of
-    * the cross-modal containment verb. */
-  def imageBlockBitmaps(
-      docs: DataFrame, payloadCol: String): Array[Array[Long]] =
-    segmentBlockBitmaps(docs.select(imageDHash(col(payloadCol)).as("__dh")))
+  /** [[segmentBlockBitmaps]] over a catalog's unit hashes — the 32 KB
+    * artifact [[graft.streaming.StreamingOps.dropSetOverlapNearDups]]
+    * probes. Frame and still hashes share one kernel
+    * ([[videoImageMatches]]'s exactness argument), so the bitmaps of
+    * an [[UnitHashes.image]] catalog gate a [[UnitHashes.videoFrames]]
+    * stream (drop clips where ≥minFrac of sampled frames match a
+    * banned still), and soundtrack and clip segments share one
+    * envelope kernel, so [[UnitHashes.audioSegments]] bitmaps gate a
+    * [[UnitHashes.videoSoundtrack]] stream. */
+  def blockBitmaps(docs: DataFrame, payloadCol: String, fp: UnitHashes): Array[Array[Long]] =
+    segmentBlockBitmaps(docs.select(explode(fp(col(payloadCol))).as("__dh")))
 
   /** RIFF/AVI magic: 'RIFF' at offset 0, 'AVI ' at offset 8. */
   private def isAvi(payload: Column): Column =
@@ -1992,32 +1762,6 @@ object Multimodal {
             .otherwise(st.getField("reps")).as("reps"))
       },
       st => st.getField("reps"))
-  }
-
-  /** SHOT-KEYED video near-dup pairs — [[videoNearDupPairsShifted]]
-    * with the hash SET reduced to one representative per shot
-    * ([[videoShotFrameDHashes]]): videos pair when ≥ `minFrac` of
-    * the smaller side's SHOT fingerprints match, so re-cuts that
-    * stretch or shorten scenes (same scenes, different durations —
-    * which skew the per-frame distinct-hash sets whenever scenes
-    * carry internal motion) still pair at full containment. Composes
-    * with the audited [[hashSetOverlapPairs]] core UNCHANGED — same
-    * flood cap, same chunk-cell machinery, same output shape
-    * (id_a, id_b, n_match, match_frac). `cutHamming` is the shot
-    * detector's threshold; `maxHamming` the (optional) near-match
-    * band on representative hashes. */
-  def videoNearDupPairsShotKeyed(
-      docs: DataFrame, idCol: String, payloadCol: String,
-      cutHamming: Int = 16, minFrac: Double = 0.5, maxHamming: Int = 0,
-      maxBucket: Int = 65536, chunkSize: Int = 1024): DataFrame = {
-    val hashes = docs
-      .select(col(idCol), col(payloadCol))
-      .repartition(Dedup.pinnedParts(docs)) // decode frontier spread
-      .select(col(idCol),
-        videoShotFrameDHashes(col(payloadCol), cutHamming).as("__sh"))
-      .filter(col("__sh").isNotNull && size(col("__sh")) > 0)
-      .select(col(idCol), explode(col("__sh.dhash")).as("__dh"))
-    hashSetOverlapPairs(hashes, idCol, minFrac, maxHamming, maxBucket, chunkSize)
   }
 
   /** REAL frame sampling for AVI and animated-GIF payloads: every

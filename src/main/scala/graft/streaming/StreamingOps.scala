@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.operators.Multimodal.UnitHashes
 
 /** Streaming operator layer over event streams (SURVEY §2.9 streaming
   * rows): watermarked exact dedup, windowed aggregation, and
@@ -252,8 +253,14 @@ object StreamingOps {
     * precision matters. */
   def dropSimhashNearDups(
       stream: DataFrame, idCol: String, textCol: String,
-      refBlocks: DataFrame): DataFrame = {
-    val withBlocks = graft.operators.Dedup.withSimhashBlocks(stream, textCol)
+      refBlocks: DataFrame): DataFrame =
+    dropBlockHits(graft.operators.Dedup.withSimhashBlocks(stream, textCol), refBlocks)
+
+  /** The four-band broadcast probe of the single-hash gates: one
+    * stream–static broadcast EQUI left join per band of `withBlocks`'
+    * __b0..__b3 against `refBlocks` (band, bv), keeping the rows all
+    * four probes missed, with the block columns dropped again. */
+  private def dropBlockHits(withBlocks: DataFrame, refBlocks: DataFrame): DataFrame = {
     val probed = (0 until 4).foldLeft(withBlocks) { (df, b) =>
       val ref = broadcast(
         refBlocks.filter(col("band") === b).select(col("bv").as(s"__m$b")))
@@ -283,17 +290,9 @@ object StreamingOps {
     * so gate and pairs calls stay drop-in swappable. */
   def dropImageNearDups(
       stream: DataFrame, idCol: String, payloadCol: String,
-      refBlocks: DataFrame): DataFrame = {
-    val withBlocks = graft.operators.Multimodal.withImageBlocks(stream, payloadCol)
-    val probed = (0 until 4).foldLeft(withBlocks) { (df, b) =>
-      val ref = broadcast(
-        refBlocks.filter(col("band") === b).select(col("bv").as(s"__m$b")))
-      df.join(ref, col(s"__b$b") === col(s"__m$b"), "left")
-    }
-    probed
-      .filter((0 until 4).map(b => col(s"__m$b").isNull).reduce(_ && _))
-      .drop((0 until 4).flatMap(b => Seq(s"__b$b", s"__m$b")): _*)
-  }
+      refBlocks: DataFrame): DataFrame =
+    dropBlockHits(graft.operators.Multimodal.withHashBlocks(
+      stream, graft.operators.Multimodal.imageDHash(col(payloadCol))), refBlocks)
 
   /** STREAMING audio near-dup gate — [[dropImageNearDups]] for the
     * audio column: drop an arriving clip iff any of its four
@@ -306,116 +305,36 @@ object StreamingOps {
     * [[dropImageNearDups]]. */
   def dropAudioNearDups(
       stream: DataFrame, idCol: String, payloadCol: String,
-      refBlocks: DataFrame): DataFrame = {
-    val withBlocks = {
-      val withH = stream.withColumn("__dh",
-        graft.operators.Multimodal.audioDHash(col(payloadCol)))
-      withH.select(
-        stream.columns.toIndexedSeq.map(col) ++
-          (0 until 4).map(b =>
-            shiftrightunsigned(col("__dh"), 48 - 16 * b)
-              .bitwiseAND(lit(0xFFFFL)).cast("int").as(s"__b$b")): _*)
-    }
-    val probed = (0 until 4).foldLeft(withBlocks) { (df, b) =>
-      val ref = broadcast(
-        refBlocks.filter(col("band") === b).select(col("bv").as(s"__m$b")))
-      df.join(ref, col(s"__b$b") === col(s"__m$b"), "left")
-    }
-    probed
-      .filter((0 until 4).map(b => col(s"__m$b").isNull).reduce(_ && _))
-      .drop((0 until 4).flatMap(b => Seq(s"__b$b", s"__m$b")): _*)
-  }
+      refBlocks: DataFrame): DataFrame =
+    dropBlockHits(graft.operators.Multimodal.withHashBlocks(
+      stream, graft.operators.Multimodal.audioDHash(col(payloadCol))), refBlocks)
 
-  /** STREAMING trim-tolerant audio gate — the SHIFTED twin of
-    * [[dropAudioNearDups]]: drop an arriving clip iff at least
-    * `minFrac` of its fixed-length SEGMENT hashes
-    * ([[graft.operators.Multimodal.audioSegmentDHashes]]) hit the
+  /** STREAMING set-overlap gate — the trim-tolerant twin of the
+    * single-hash gates: drop an arriving payload iff at least
+    * `minFrac` of its unit hashes (`fp`, e.g.
+    * [[graft.operators.Multimodal.UnitHashes.audioSegments]]) hit the
     * reference catalog's block bitmaps
-    * ([[graft.operators.Multimodal.audioSegmentBlockBitmaps]] — a
-    * 32 KB artifact bounded by the block space, probed at O(1) per
-    * band inside ONE pure expression). Catches re-uploads whose
-    * leading segments were trimmed (modulo segFrames — the batch
-    * form's caveat), which move every window of the whole-clip hash
-    * and slip through the aligned gate. PURE per-row: no join stage
-    * at all (the aligned gates pay four broadcast joins), no
-    * watermark, no state. Per segment the block probe is
-    * pigeonhole-complete for Hamming ≤3; block coincidences
-    * over-count matched segments (high-recall semantics — the
-    * `minFrac` threshold is the precision lever the single-hash
-    * gates don't have). Undecodable / sub-segment payloads have no
-    * segments and are KEPT. */
-  def dropAudioNearDupsShifted(
+    * ([[graft.operators.Multimodal.blockBitmaps]] — a 32 KB artifact
+    * bounded by the block space, probed at O(1) per band inside ONE
+    * pure expression). Catches re-uploads the whole-payload gates
+    * miss, along whichever axis the extractor tolerates: leading
+    * trims by whole segments or sampled frames, sample-rate
+    * conversion (ms segments on both sides), and cross-modal
+    * containment (a video's frames against an image catalog's
+    * bitmaps, its soundtrack against an audio catalog's). PURE
+    * per-row: no join stage at all (the single-hash gates pay four
+    * broadcast joins), no watermark, no state. Per unit the block
+    * probe is pigeonhole-complete for Hamming ≤3; block coincidences
+    * over-count matched units (high-recall semantics — `minFrac` is
+    * the precision lever the single-hash gates don't have).
+    * Undecodable payloads have no units and are KEPT. */
+  def dropSetOverlapNearDups(
       stream: DataFrame, payloadCol: String,
-      refBitmaps: Array[Array[Long]], segFrames: Int,
+      fp: UnitHashes, refBitmaps: Array[Array[Long]],
       minFrac: Double = 0.5): DataFrame = {
     require(minFrac > 0 && minFrac <= 1, s"minFrac=$minFrac outside (0,1]")
     val frac = graft.functions.GraftFunctions.blockBitmapMatchFrac(
-      graft.operators.Multimodal.audioSegmentDHashes(col(payloadCol), segFrames)
-        .getField("dhash"), refBitmaps)
-    stream.filter(frac.isNull || frac < minFrac)
-  }
-
-  /** STREAMING rate-tolerant audio gate — [[dropAudioNearDupsShifted]]
-    * with TIME-based segment hashes
-    * ([[graft.operators.Multimodal.audioSegmentDHashesMs]] against an
-    * [[graft.operators.Multimodal.audioSegmentBlockBitmapsMs]]
-    * catalog): drop an arriving clip iff ≥ `minFrac` of its ms-keyed
-    * segment hashes hit the bitmaps — and because both sides key
-    * segments by TIME, a re-upload RE-ENCODED AT A DIFFERENT SAMPLE
-    * RATE still hits, the case the frame-count gate structurally
-    * passes (its fixed-frame segments cover different audio at the
-    * new rate, so no probe coincides). Same purity contract as the
-    * whole family: one expression per row, no join, no watermark, no
-    * state; undecodable and sub-65-derived-segFrames payloads have no
-    * segments and are KEPT. */
-  def dropAudioNearDupsResampled(
-      stream: DataFrame, payloadCol: String,
-      refBitmaps: Array[Array[Long]], msPerSeg: Int,
-      minFrac: Double = 0.5): DataFrame = {
-    require(minFrac > 0 && minFrac <= 1, s"minFrac=$minFrac outside (0,1]")
-    val frac = graft.functions.GraftFunctions.blockBitmapMatchFrac(
-      graft.operators.Multimodal.audioSegmentDHashesMs(col(payloadCol), msPerSeg)
-        .getField("dhash"), refBitmaps)
-    stream.filter(frac.isNull || frac < minFrac)
-  }
-
-  /** STREAMING trim-tolerant video gate — [[dropAudioNearDupsShifted]]
-    * on frame hashes ([[graft.operators.Multimodal.videoFrameDHashes]],
-    * one container walk per row; tolerance modulo `stride`). */
-  def dropVideoNearDupsShifted(
-      stream: DataFrame, payloadCol: String,
-      refBitmaps: Array[Array[Long]], stride: Int,
-      minFrac: Double = 0.5): DataFrame = {
-    require(minFrac > 0 && minFrac <= 1, s"minFrac=$minFrac outside (0,1]")
-    val frac = graft.functions.GraftFunctions.blockBitmapMatchFrac(
-      graft.operators.Multimodal.videoFrameDHashes(col(payloadCol), stride)
-        .getField("dhash"), refBitmaps)
-    stream.filter(frac.isNull || frac < minFrac)
-  }
-
-  /** STREAMING cross-modal AUDIO gate — drop an arriving VIDEO iff at
-    * least `minFrac` of its PCM soundtrack's segment hashes
-    * ([[graft.operators.Multimodal.videoAudioSegmentDHashes]] — the
-    * 'auds'-track twin of the WAV form, one envelope kernel) hit a
-    * banned-AUDIO catalog's block bitmaps
-    * ([[graft.operators.Multimodal.audioSegmentBlockBitmaps]] over
-    * the WAV catalog — the SAME 32 KB artifact, because soundtrack
-    * and clip segments hash through one kernel). The trust-and-safety
-    * verb "block uploads that embed this known audio", batch or
-    * stream, PURE per-row: no join, no watermark, no state. Segment
-    * probes are pigeonhole-complete for Hamming ≤3; block
-    * coincidences over-count (high-recall — `minFrac` is the
-    * precision lever); tolerance to leading trims is modulo
-    * segFrames. Videos without a decodable PCM track are KEPT
-    * (absence of evidence, the family rule). */
-  def dropVideosWithKnownAudio(
-      stream: DataFrame, payloadCol: String,
-      refBitmaps: Array[Array[Long]], segFrames: Int,
-      minFrac: Double = 0.5): DataFrame = {
-    require(minFrac > 0 && minFrac <= 1, s"minFrac=$minFrac outside (0,1]")
-    val frac = graft.functions.GraftFunctions.blockBitmapMatchFrac(
-      graft.operators.Multimodal.videoAudioSegmentDHashes(col(payloadCol), segFrames)
-        .getField("dhash"), refBitmaps)
+      fp(col(payloadCol)), refBitmaps)
     stream.filter(frac.isNull || frac < minFrac)
   }
 
@@ -426,8 +345,8 @@ object StreamingOps {
     * images probe the image catalog's bitmaps (single dHash), videos
     * their sampled-frame hashes, audio its segment hashes, each
     * against a 32 KB [[graft.functions.BlockBitmapMatchFrac]]
-    * artifact (`imageBlockBitmaps` / `videoFrameBlockBitmaps` /
-    * `audioSegmentBlockBitmaps`). A row drops when its matched
+    * artifact ([[graft.operators.Multimodal.blockBitmaps]] of each
+    * kind's catalog). A row drops when its matched
     * fraction clears `minFrac` (reason '<family>_near_dup');
     * 'undecodable' is DECODE-DERIVED — unrecognized payloads AND
     * payloads that sniff as a known format yet fail its decoder
@@ -457,11 +376,9 @@ object StreamingOps {
       when(kind.isin("png", "bmp", "gif", "jpeg"),
         frac(array(graft.operators.Multimodal.imageDHash(p)), imageBitmaps))
         .when(kind === "avi",
-          frac(graft.operators.Multimodal.videoFrameDHashes(p, videoStride)
-            .getField("dhash"), videoBitmaps))
+          frac(UnitHashes.videoFrames(videoStride)(p), videoBitmaps))
         .when(kind === "wav",
-          frac(graft.operators.Multimodal.audioSegmentDHashes(p, audioSegFrames)
-            .getField("dhash"), audioBitmaps))
+          frac(UnitHashes.audioSegments(audioSegFrames)(p), audioBitmaps))
     val isDup = matchedFrac.isNotNull && matchedFrac >= minFrac
     stream
       .withColumn("kind", kind)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.operators.Multimodal
+import graft.operators.Multimodal.UnitHashes
 
 /** IMA-ADPCM WAV decode: the one compressed-audio format that is
   * public-spec and pure-JVM — round-trip fidelity, multi-block state
@@ -62,12 +63,13 @@ class WavAdpcmSpec extends SparkSpec {
       s"only the PCM/ADPCM twin pair survives, got $pairs")
     // segment hashes flow too: the shifted form catches an ADPCM
     // re-encode that was ALSO segment-trimmed (both axes composed)
-    val shifted = Multimodal.audioNearDupPairsShifted(
+    val shifted = Multimodal.setOverlapPairs(
       Seq(
         0L -> Multimodal.encodeWav(2, 8000, 640, s0),
         1L -> Multimodal.encodeWavImaAdpcm(2, 8000, 512, (c, f) => s0(c, f + 128)))
         .toDF("clip_id", "payload"),
-      "clip_id", "payload", segFrames = 128, minFrac = 0.5, maxHamming = 3)
+      "clip_id", "payload", UnitHashes.audioSegments(segFrames = 128), minFrac = 0.5,
+      maxHamming = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(shifted == Set((0L, 1L)),
       s"trimmed ADPCM re-encode must pair through the segment set, got $shifted")

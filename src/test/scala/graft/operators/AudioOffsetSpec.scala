@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.functions.{AudioEnvelope, WavDecode}
+import graft.operators.Multimodal.UnitHashes
 
 /** Arbitrary-offset audio trim tolerance: the prefix-sum kernel is
   * bit-identical to the reference window walk, sliding hashes at
@@ -61,7 +62,7 @@ class AudioOffsetSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(4)))
       .sortBy(t => (t._1, t._2))
     assert(off.toSeq == Seq((0L, 1L, -128, 1.0), (1L, 0L, 128, 1.0)))
-    val shifted = Multimodal.audioNearDupPairsShifted(docs, "id", "payload", 128)
+    val shifted = Multimodal.setOverlapPairs(docs, "id", "payload", UnitHashes.audioSegments(128))
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(shifted.toSeq == Seq((0L, 1L)), "the aligned case both forms catch")
   }
@@ -70,7 +71,7 @@ class AudioOffsetSpec extends SparkSpec {
     import spark.implicits._
     val docs = Seq(0L -> clip(500), 1L -> clip(463, mult = 3, shift = 37))
       .toDF("id", "payload")
-    assert(Multimodal.audioNearDupPairsShifted(docs, "id", "payload", 128)
+    assert(Multimodal.setOverlapPairs(docs, "id", "payload", UnitHashes.audioSegments(128))
       .isEmpty, "non-multiple trim defeats fixed-phase segmentation by design")
     val off = Multimodal.audioNearDupPairsOffset(docs, "id", "payload", 128)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(4)))
@@ -94,19 +95,19 @@ class AudioOffsetSpec extends SparkSpec {
   test("incremental: offset-trimmed copy drops against the UNCHANGED index") {
     import spark.implicits._
     val history = Seq(10L -> clip(500)).toDF("id", "payload")
-    val index = Multimodal.audioSegmentHashIndex(history, "id", "payload", 128)
+    val index = Multimodal.setOverlapIndex(history, "id", "payload", UnitHashes.audioSegments(128))
       .cache()
     val increment = Seq(
       20L -> clip(463, mult = 2, shift = 37), // trimmed+gained copy of history
       21L -> clip(400, b = 37))               // fresh content
       .toDF("id", "payload")
-    val keptPlain = Multimodal.dedupAudioAgainstIndex(
-      increment, "id", "payload", index, 128)
+    val keptPlain = Multimodal.dedupAgainstSetOverlapIndex(
+      increment, "id", "payload", index, UnitHashes.audioSegments(128))
       .select("id").as[Long].collect().toSet
     assert(keptPlain == Set(20L, 21L),
       "single-phase probe misses the 37-frame trim (the r19 gap)")
-    val keptOffset = Multimodal.dedupAudioAgainstIndexOffset(
-      increment, "id", "payload", index, 128)
+    val keptOffset = Multimodal.dedupAgainstSetOverlapIndex(
+      increment, "id", "payload", index, UnitHashes.audioSliding(128))
       .select("id").as[Long].collect().toSet
     assert(keptOffset == Set(21L),
       "dense probe drops the trimmed copy; fresh content survives")

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.operators.Multimodal.UnitHashes
 
 /** Sample-rate-tolerant audio fingerprints: time-based (millisecond)
   * segmentation hashes ideal integer resamples of one recording
@@ -61,15 +62,15 @@ class AudioResampleSpec extends SparkSpec {
       1L -> clipAt(16000, 4, 1040, gain = 3),
       2L -> clipAt(8000, 2, 1040, b = 9)) // different recording
       .toDF("clip_id", "payload")
-    val res = Multimodal.audioNearDupPairsResampled(
-      docs, "clip_id", "payload", msPerSeg = 65, minFrac = 0.5)
+    val res = Multimodal.setOverlapPairs(
+      docs, "clip_id", "payload", UnitHashes.audioSegmentsMs(msPerSeg = 65), minFrac = 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(3))).toSeq
     assert(res == Seq((0L, 1L, 1.0)),
       s"expected exactly the cross-rate pair at containment 1.0, got $res")
     // the frame-count form at ANY fixed segFrames covers different
     // audio per segment across rates — the 0/1 pair must vanish
-    val shifted = Multimodal.audioNearDupPairsShifted(
-      docs, "clip_id", "payload", segFrames = 520, minFrac = 0.5)
+    val shifted = Multimodal.setOverlapPairs(
+      docs, "clip_id", "payload", UnitHashes.audioSegments(segFrames = 520), minFrac = 0.5)
       .collect()
     assert(shifted.isEmpty,
       s"frame-count segmentation must miss the rate-converted copy")
@@ -84,8 +85,8 @@ class AudioResampleSpec extends SparkSpec {
       0L -> clipAt(44100, 21, 5732, b = 2), // 21·2100=44100: integer resample of a 2100 Hz logical source
       1L -> clipAt(88200, 42, 5732, b = 2, gain = 2))
       .toDF("clip_id", "payload")
-    val res = Multimodal.audioNearDupPairsResampled(
-      docs, "clip_id", "payload", msPerSeg = 65, minFrac = 0.5)
+    val res = Multimodal.setOverlapPairs(
+      docs, "clip_id", "payload", UnitHashes.audioSegmentsMs(msPerSeg = 65), minFrac = 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(3))).toSeq
     assert(res.size == 1 && res.head._1 == 0L && res.head._2 == 1L &&
       res.head._3 >= 0.5, s"rate-doubled copy must clear the gate, got $res")
@@ -98,20 +99,20 @@ class AudioResampleSpec extends SparkSpec {
       100L -> clipAt(16000, 4, 1040, gain = 3), // 16 kHz re-encode of history 0
       101L -> clipAt(8000, 2, 1040, b = 9))     // fresh recording
       .toDF("clip_id", "payload")
-    val msIdx = Multimodal.audioSegmentHashIndexMs(
-      history, "clip_id", "payload", msPerSeg = 65)
-    val keptMs = Multimodal.dedupAudioAgainstIndexMs(
-      increment, "clip_id", "payload", msIdx, msPerSeg = 65)
+    val msIdx = Multimodal.setOverlapIndex(
+      history, "clip_id", "payload", UnitHashes.audioSegmentsMs(msPerSeg = 65))
+    val keptMs = Multimodal.dedupAgainstSetOverlapIndex(
+      increment, "clip_id", "payload", msIdx, UnitHashes.audioSegmentsMs(msPerSeg = 65))
       .select("clip_id").as[Long].collect().toSet
     assert(keptMs == Set(101L),
       s"ms index must drop the cross-rate re-encode, kept $keptMs")
     // the frame-count index at the history's own segmentation keeps
     // BOTH: the 16 kHz clip's 520-frame segments cover half the time
     // span, so no unit hash coincides
-    val frIdx = Multimodal.audioSegmentHashIndex(
-      history, "clip_id", "payload", segFrames = 520)
-    val keptFr = Multimodal.dedupAudioAgainstIndex(
-      increment, "clip_id", "payload", frIdx, segFrames = 520)
+    val frIdx = Multimodal.setOverlapIndex(
+      history, "clip_id", "payload", UnitHashes.audioSegments(segFrames = 520))
+    val keptFr = Multimodal.dedupAgainstSetOverlapIndex(
+      increment, "clip_id", "payload", frIdx, UnitHashes.audioSegments(segFrames = 520))
       .select("clip_id").as[Long].collect().toSet
     assert(keptFr == Set(100L, 101L),
       s"frame-count index structurally keeps the re-encode, kept $keptFr")
@@ -126,8 +127,8 @@ class AudioResampleSpec extends SparkSpec {
       3L -> clipAt(8000, 2, 1040, b = 9),
       4L -> "junk".getBytes("UTF-8"))
       .toDF("clip_id", "payload")
-    val kept = Multimodal.dedupAudioNearDupsResampled(
-      docs, "clip_id", "payload", msPerSeg = 65)
+    val kept = Multimodal.dedupSetOverlap(
+      docs, "clip_id", "payload", UnitHashes.audioSegmentsMs(msPerSeg = 65))
       .select("clip_id").as[Long].collect().toSet
     assert(kept == Set(0L, 3L, 4L), s"got $kept")
   }
@@ -135,15 +136,15 @@ class AudioResampleSpec extends SparkSpec {
   test("streaming rate-tolerant gate: drops cross-rate re-uploads, join-free, zero state") {
     import spark.implicits._
     val catalog = Seq(100L -> clipAt(8000, 2, 1040)).toDF("clip_id", "payload")
-    val bitmaps = Multimodal.audioSegmentBlockBitmapsMs(catalog, "payload", 65)
+    val bitmaps = Multimodal.blockBitmaps(catalog, "payload", UnitHashes.audioSegmentsMs(65))
     val arrivals = Seq(
       1L -> clipAt(16000, 4, 1040, gain = 3), // cross-rate re-encode → drop
       2L -> clipAt(8000, 2, 1040, b = 9),     // fresh recording → keep
       3L -> clipAt(900, 1, 1800),             // sub-65 derived → keep (NULL)
       4L -> "junk".getBytes("UTF-8"))         // undecodable → keep
       .toDF("clip_id", "payload")
-    val kept = graft.streaming.StreamingOps.dropAudioNearDupsResampled(
-      arrivals, "payload", bitmaps, msPerSeg = 65)
+    val kept = graft.streaming.StreamingOps.dropSetOverlapNearDups(
+      arrivals, "payload", UnitHashes.audioSegmentsMs(msPerSeg = 65), bitmaps)
       .select("clip_id").as[Long].collect().toSet
     assert(kept == Set(2L, 3L, 4L), s"batch verdicts: got $kept")
     // (no frame-count contrast here: the BLOCK-bitmap gate is
@@ -154,8 +155,9 @@ class AudioResampleSpec extends SparkSpec {
     // streaming form: same verdicts, join-free, zero state
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val stream = MemoryStream[(Long, Array[Byte])](spark)
-    val out = graft.streaming.StreamingOps.dropAudioNearDupsResampled(
-      stream.toDS().toDF("clip_id", "payload"), "payload", bitmaps, msPerSeg = 65)
+    val out = graft.streaming.StreamingOps.dropSetOverlapNearDups(
+      stream.toDS().toDF("clip_id", "payload"), "payload",
+      UnitHashes.audioSegmentsMs(msPerSeg = 65), bitmaps)
     assert(!out.queryExecution.analyzed.toString.toLowerCase.contains("join"),
       "the bitmap gate must be join-free")
     val ckpt = java.nio.file.Files.createTempDirectory("rategate").toString

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.functions.{AviDecode, GraftFunctions}
+import graft.operators.Multimodal.UnitHashes
 
 /** Round-19 AVI extensions: MJPEG frame decode (the compressed
   * legacy-AVI class reachable with the shipped JDK JPEG reader) and
@@ -58,8 +59,9 @@ class AviAudioMjpegSpec extends SparkSpec {
       2L -> Multimodal.encodeAviMjpeg(48, 32, 4,
         (f, x, y, _) => 250 - x * 3 - y * 2 - f * 7, quality = 0.9f),
       3L -> "junk".getBytes("UTF-8")).toDF("video_id", "payload")
-    val pairs = Multimodal.videoNearDupPairsShifted(
-      vids, "video_id", "payload", stride = 1, minFrac = 0.5, maxHamming = 3)
+    val pairs = Multimodal.setOverlapPairs(
+      vids, "video_id", "payload", UnitHashes.videoFrames(stride = 1), minFrac = 0.5,
+      maxHamming = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs.contains((0L, 1L)),
       s"the MJPEG re-encode must pair with its uncompressed twin, got $pairs")
@@ -183,9 +185,9 @@ class AviAudioMjpegSpec extends SparkSpec {
     def base(b: Int)(c: Int, f: Int): Int = (((f * 53 + c * 17 + b * 101) % 3989) - 1994)
     // banned catalog: ONE WAV clip — its 32 KB bitmaps gate videos
     // because soundtrack and clip segments hash through one kernel
-    val banned = Multimodal.audioSegmentBlockBitmaps(
+    val banned = Multimodal.blockBitmaps(
       Seq(100L -> Multimodal.encodeWav(2, 8000, 640, base(0))).toDF("clip_id", "payload"),
-      "payload", 128)
+      "payload", UnitHashes.audioSegments(128))
     val arrivals = Seq(
       // soundtrack = the banned clip, segment-trimmed AND gain x3: drop
       0L -> Multimodal.encodeAvi(8, 6, 2, (f, x, y, c) => (x + y + f + c) % 200,
@@ -198,15 +200,17 @@ class AviAudioMjpegSpec extends SparkSpec {
       // mute video and junk: no PCM track, kept
       2L -> Multimodal.encodeAvi(8, 6, 2, (f, x, y, c) => (x + y + f + c) % 200),
       3L -> "junk".getBytes("UTF-8"))
-    val keptBatch = graft.streaming.StreamingOps.dropVideosWithKnownAudio(
-      arrivals.toDF("video_id", "payload"), "payload", banned, segFrames = 128)
+    val keptBatch = graft.streaming.StreamingOps.dropSetOverlapNearDups(
+      arrivals.toDF("video_id", "payload"), "payload",
+      UnitHashes.videoSoundtrack(segFrames = 128), banned)
       .select("video_id").collect().map(_.getLong(0)).toSet
     assert(keptBatch == Set(1L, 2L, 3L), s"batch gate verdicts: got $keptBatch")
     // streaming form: join-free pure expression, zero state rows
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val stream = MemoryStream[(Long, Array[Byte])](spark)
-    val out = graft.streaming.StreamingOps.dropVideosWithKnownAudio(
-      stream.toDS().toDF("video_id", "payload"), "payload", banned, segFrames = 128)
+    val out = graft.streaming.StreamingOps.dropSetOverlapNearDups(
+      stream.toDS().toDF("video_id", "payload"), "payload",
+      UnitHashes.videoSoundtrack(segFrames = 128), banned)
     assert(!out.queryExecution.analyzed.toString.toLowerCase.contains("join"),
       "the bitmap gate must be join-free")
     val ckpt = java.nio.file.Files.createTempDirectory("avgate").toString
@@ -229,12 +233,15 @@ class AviAudioMjpegSpec extends SparkSpec {
     def vpix(b: Int)(f: Int, x: Int, y: Int, c: Int): Int =
       (x * 17 + y * 29 + c * 37 + f * 41 + b * 53) % 180
     def s0(c: Int, f: Int): Int = ((f * 53 + c * 17 + 101) % 3989) - 1994
-    val imgCat = Multimodal.imageBlockBitmaps(
-      Seq(900L -> Multimodal.encodePng(12, 10, 1, ipix(0))).toDF("id", "payload"), "payload")
-    val vidCat = Multimodal.videoFrameBlockBitmaps(
-      Seq(901L -> Multimodal.encodeAvi(12, 10, 24, vpix(0))).toDF("id", "payload"), "payload", 4)
-    val audCat = Multimodal.audioSegmentBlockBitmaps(
-      Seq(902L -> Multimodal.encodeWav(2, 8000, 640, s0)).toDF("id", "payload"), "payload", 128)
+    val imgCat = Multimodal.blockBitmaps(
+      Seq(900L -> Multimodal.encodePng(12, 10, 1, ipix(0))).toDF("id", "payload"), "payload",
+      UnitHashes.image)
+    val vidCat = Multimodal.blockBitmaps(
+      Seq(901L -> Multimodal.encodeAvi(12, 10, 24, vpix(0))).toDF("id", "payload"), "payload",
+      UnitHashes.videoFrames(4))
+    val audCat = Multimodal.blockBitmaps(
+      Seq(902L -> Multimodal.encodeWav(2, 8000, 640, s0)).toDF("id", "payload"), "payload",
+      UnitHashes.audioSegments(128))
     val arrivals = Seq(
       0L -> Multimodal.encodePng(12, 10, 1, (x, y, c) => ipix(0)(x, y, c) + 40), // image twin → drop
       1L -> Multimodal.encodePng(14, 11, 3, ipix(4)), // fresh family → keep

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.operators.Multimodal.UnitHashes
 
 /** Animated GIF as a VIDEO column: one hash kernel across containers
   * (a GIF and an AVI carrying the same RGB frames hash identically
@@ -61,7 +62,7 @@ class GifAnimSpec extends SparkSpec {
       2L -> aviOf(14, 10, 3, f0 = 2), // first two frames trimmed, AVI container
       3L -> "junk".getBytes("UTF-8"))
       .toDF("id", "payload")
-    val pairs = Multimodal.videoNearDupPairsShifted(docs, "id", "payload", 1)
+    val pairs = Multimodal.setOverlapPairs(docs, "id", "payload", UnitHashes.videoFrames(1))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(3))).toSet
     assert(pairs == Set((0L, 1L, 1.0), (0L, 2L, 1.0), (1L, 2L, 1.0)),
       s"got $pairs")

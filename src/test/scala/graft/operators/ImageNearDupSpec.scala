@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.functions.GraftFunctions
+import graft.operators.Multimodal.UnitHashes
 
 /** Perceptual image near-dup: dHash known values, the two invariance
   * claims (uniform brightness shift, exact NN upscale), NULL
@@ -176,15 +177,16 @@ class ImageNearDupSpec extends SparkSpec {
     assert(!aligned.contains((0L, 1L)),
       s"aligned form must miss the time-shifted copy, got ${aligned.toSeq}")
     // ...the set-overlap form scores containment 1.0
-    val shifted = Multimodal.videoNearDupPairsShifted(
-      vids, "video_id", "payload", stride = 1, minFrac = 0.5)
+    val shifted = Multimodal.setOverlapPairs(
+      vids, "video_id", "payload", UnitHashes.videoFrames(stride = 1), minFrac = 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
     assert(shifted.toSeq == Seq((0L, 1L, 6L, 1.0)),
       s"trim must pair at containment 1.0, got ${shifted.toSeq}")
     // maxHamming>0 routes hash-value pairs through hammingBandPairs;
     // on exact-copy fixtures it must agree with the exact path
-    val tolerant = Multimodal.videoNearDupPairsShifted(
-      vids, "video_id", "payload", stride = 1, minFrac = 0.5, maxHamming = 3)
+    val tolerant = Multimodal.setOverlapPairs(
+      vids, "video_id", "payload", UnitHashes.videoFrames(stride = 1), minFrac = 0.5,
+      maxHamming = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(tolerant.contains((0L, 1L)) && !tolerant.exists(p => p._1 == 3L || p._2 == 3L),
       s"tolerance path must keep the trim pair and never pair junk, got ${tolerant.toSeq}")
@@ -195,10 +197,11 @@ class ImageNearDupSpec extends SparkSpec {
       1L -> Multimodal.encodeAvi(12, 10, 7,
         (f, x, y, c) => pix(0)(f + 1, x, y, c)))
       .toDF("video_id", "payload")
-    assert(Multimodal.videoNearDupPairsShifted(
-      offByOne, "video_id", "payload", stride = 2, minFrac = 0.5).isEmpty)
-    assert(Multimodal.videoNearDupPairsShifted(
-      offByOne, "video_id", "payload", stride = 1, minFrac = 0.5).count() == 1)
+    assert(Multimodal.setOverlapPairs(
+      offByOne, "video_id", "payload", UnitHashes.videoFrames(stride = 2), minFrac = 0.5).isEmpty)
+    assert(Multimodal.setOverlapPairs(
+      offByOne, "video_id", "payload", UnitHashes.videoFrames(stride = 1),
+      minFrac = 0.5).count() == 1)
   }
 
   test("audio fingerprint: gain invariance, short-clip NULL, junk never pairs") {
@@ -264,8 +267,8 @@ class ImageNearDupSpec extends SparkSpec {
       s"whole-clip hash must miss the trimmed copy, got ${whole.toSeq}")
     // ...the segment-set form pairs it at containment 1.0 (4 of the
     // original's 5 segment hashes survive: segments 1-4)
-    val seg = Multimodal.audioNearDupPairsShifted(
-      clips, "clip_id", "payload", segFrames = 128, minFrac = 0.5)
+    val seg = Multimodal.setOverlapPairs(
+      clips, "clip_id", "payload", UnitHashes.audioSegments(segFrames = 128), minFrac = 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
     // containment: n_match == the copy's DISTINCT segment-hash count
     val copyDistinct = clips.filter(col("clip_id") === 1L)
@@ -280,11 +283,13 @@ class ImageNearDupSpec extends SparkSpec {
       0L -> Multimodal.encodeWav(2, 8000, 640, s0),
       1L -> Multimodal.encodeWav(2, 8000, 576, (c, f) => s0(c, f + 64)))
       .toDF("clip_id", "payload")
-    assert(Multimodal.audioNearDupPairsShifted(
-      offBoundary, "clip_id", "payload", segFrames = 128, minFrac = 0.5).isEmpty)
+    assert(Multimodal.setOverlapPairs(
+      offBoundary, "clip_id", "payload", UnitHashes.audioSegments(segFrames = 128),
+      minFrac = 0.5).isEmpty)
     // segFrames below one frame per envelope window refuses fast
     intercept[IllegalArgumentException] {
-      Multimodal.audioNearDupPairsShifted(clips, "clip_id", "payload", segFrames = 64)
+      Multimodal.setOverlapPairs(
+        clips, "clip_id", "payload", UnitHashes.audioSegments(segFrames = 64))
     }
   }
 
@@ -325,8 +330,8 @@ class ImageNearDupSpec extends SparkSpec {
       3L -> Multimodal.encodeAvi(12, 10, 6, pix(7)),
       4L -> Multimodal.encodeAvi(12, 10, 6, (f, x, y, c) => pix(7)(f, x, y, c) + 40))
     val df = vids.toDF("video_id", "payload")
-    val capped = Multimodal.videoNearDupPairsShifted(
-      df, "video_id", "payload", stride = 1, minFrac = 0.5, maxBucket = 3)
+    val capped = Multimodal.setOverlapPairs(
+      df, "video_id", "payload", UnitHashes.videoFrames(stride = 1), minFrac = 0.5, maxBucket = 3)
       .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(capped == Set((3L, 4L)),
       s"only the true copy family must pair once the flood hash is capped, got $capped")
@@ -334,8 +339,8 @@ class ImageNearDupSpec extends SparkSpec {
     // every pair reach the join (frac 1/6 < 0.5 gates them out of the
     // OUTPUT, but the quadratic join volume is exactly what the cap
     // exists to prevent — assert the frac-level behavior too)
-    val uncapped = Multimodal.videoNearDupPairsShifted(
-      df, "video_id", "payload", stride = 1, minFrac = 0.1)
+    val uncapped = Multimodal.setOverlapPairs(
+      df, "video_id", "payload", UnitHashes.videoFrames(stride = 1), minFrac = 0.1)
       .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(uncapped.size == 10, s"uncapped at low minFrac: all 10 pairs share the slate, got $uncapped")
   }
@@ -359,8 +364,8 @@ class ImageNearDupSpec extends SparkSpec {
         (f, x, y, c) => pix(7)(f, x, y, c) + 40))
     val vdf = vids.toDF("video_id", "payload")
     def vpairs(maxHamming: Int, chunkSize: Int) =
-      Multimodal.videoNearDupPairsShifted(
-        vdf, "video_id", "payload", stride = 1, minFrac = 0.1,
+      Multimodal.setOverlapPairs(
+        vdf, "video_id", "payload", UnitHashes.videoFrames(stride = 1), minFrac = 0.1,
         maxHamming = maxHamming, chunkSize = chunkSize)
         .collect().map(r =>
           (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
@@ -382,8 +387,8 @@ class ImageNearDupSpec extends SparkSpec {
         (c, f) => ((f * 173 + c * 13 + 999) % 3797) - 1898))
       .toDF("clip_id", "payload")
     def apairs(chunkSize: Int) =
-      Multimodal.audioNearDupPairsShifted(
-        clips, "clip_id", "payload", segFrames = 128, minFrac = 0.5,
+      Multimodal.setOverlapPairs(
+        clips, "clip_id", "payload", UnitHashes.audioSegments(segFrames = 128), minFrac = 0.5,
         chunkSize = chunkSize)
         .collect().map(r =>
           (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
@@ -503,15 +508,15 @@ class ImageNearDupSpec extends SparkSpec {
     // the video bitmap gate (frame and still hashes share one
     // kernel) — the clip containing the banned still drops at every
     // sampled frame, a noise clip and junk keep
-    val banned = Multimodal.imageBlockBitmaps(
-      imgs.filter(col("img_id") === 0L), "payload")
+    val banned = Multimodal.blockBitmaps(
+      imgs.filter(col("img_id") === 0L), "payload", UnitHashes.image)
     val arrivals = Seq(
       0L -> Multimodal.encodeAvi(12, 10, 6, pix), // contains the banned frame family
       1L -> Multimodal.encodeAvi(12, 10, 6,
         (f, x, y, c) => ((f * 7 + x) * (y * 5 + c) * 73 + x * y) % 256),
       2L -> "junk".getBytes("UTF-8")).toDF("video_id", "payload")
-    val kept = graft.streaming.StreamingOps.dropVideoNearDupsShifted(
-      arrivals, "payload", banned, stride = 2, minFrac = 0.3)
+    val kept = graft.streaming.StreamingOps.dropSetOverlapNearDups(
+      arrivals, "payload", UnitHashes.videoFrames(stride = 2), banned, minFrac = 0.3)
       .select("video_id").collect().map(_.getLong(0)).toSet
     assert(kept == Set(1L, 2L), s"cross-modal gate verdicts: got $kept")
     // catalog-side flood cap: two identical catalog entries push every
@@ -537,7 +542,7 @@ class ImageNearDupSpec extends SparkSpec {
     def s0(c: Int, f: Int): Int = ((f * 53 + c * 17 + 101) % 3989) - 1994
     val audioRef = Seq(100L -> Multimodal.encodeWav(2, 8000, 640, s0))
       .toDF("clip_id", "payload")
-    val aBitmaps = Multimodal.audioSegmentBlockBitmaps(audioRef, "payload", 128)
+    val aBitmaps = Multimodal.blockBitmaps(audioRef, "payload", UnitHashes.audioSegments(128))
     assert(aBitmaps.map(_.map(java.lang.Long.bitCount(_)).sum).sum <= 4 * 5,
       "5 segments set at most 4 blocks each")
     val audioArrivals = Seq(
@@ -547,8 +552,8 @@ class ImageNearDupSpec extends SparkSpec {
       3L -> Multimodal.encodeWav(1, 8000, 64, s0), // sub-segment → keep
       4L -> "junk".getBytes("UTF-8")) // undecodable → keep
       .toDF("clip_id", "payload")
-    val aKept = graft.streaming.StreamingOps.dropAudioNearDupsShifted(
-      audioArrivals, "payload", aBitmaps, segFrames = 128)
+    val aKept = graft.streaming.StreamingOps.dropSetOverlapNearDups(
+      audioArrivals, "payload", UnitHashes.audioSegments(segFrames = 128), aBitmaps)
       .select("clip_id").collect().map(_.getLong(0)).toSet
     assert(aKept == Set(2L, 3L, 4L), s"audio gate verdicts: got $aKept")
     // ---- video: catalog = one 24-frame clip at stride 4; arrival =
@@ -557,7 +562,7 @@ class ImageNearDupSpec extends SparkSpec {
       (x * 17 + y * 29 + c * 37 + f * 41 + b * 53) % 180
     val videoRef = Seq(100L -> Multimodal.encodeAvi(12, 10, 24, pix(0)))
       .toDF("video_id", "payload")
-    val vBitmaps = Multimodal.videoFrameBlockBitmaps(videoRef, "payload", 4)
+    val vBitmaps = Multimodal.blockBitmaps(videoRef, "payload", UnitHashes.videoFrames(4))
     val videoArrivals = Seq(
       1L -> Multimodal.encodeAvi(12, 10, 20,
         (f, x, y, c) => pix(0)(f + 4, x, y, c) + 40, topDown = true), // trim+shift → drop
@@ -569,16 +574,17 @@ class ImageNearDupSpec extends SparkSpec {
         (f, x, y, c) => ((f * 7 + x) * (y * 5 + c) * 73 + x * y) % 256), // fresh → keep
       3L -> "not a video".getBytes("UTF-8")) // undecodable → keep
       .toDF("video_id", "payload")
-    val vKept = graft.streaming.StreamingOps.dropVideoNearDupsShifted(
-      videoArrivals, "payload", vBitmaps, stride = 4)
+    val vKept = graft.streaming.StreamingOps.dropSetOverlapNearDups(
+      videoArrivals, "payload", UnitHashes.videoFrames(stride = 4), vBitmaps)
       .select("video_id").collect().map(_.getLong(0)).toSet
     assert(vKept == Set(2L, 3L), s"video gate verdicts: got $vKept")
     // ---- streaming form: same verdicts, zero state rows (pure
     // per-row expression — not even a broadcast join in the plan)
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val stream = MemoryStream[(Long, Array[Byte])](spark)
-    val out = graft.streaming.StreamingOps.dropAudioNearDupsShifted(
-      stream.toDS().toDF("clip_id", "payload"), "payload", aBitmaps, segFrames = 128)
+    val out = graft.streaming.StreamingOps.dropSetOverlapNearDups(
+      stream.toDS().toDF("clip_id", "payload"), "payload",
+      UnitHashes.audioSegments(segFrames = 128), aBitmaps)
     assert(!out.queryExecution.analyzed.toString.toLowerCase.contains("join"),
       "the bitmap gate must be join-free")
     val ckpt = java.nio.file.Files.createTempDirectory("shiftgate").toString

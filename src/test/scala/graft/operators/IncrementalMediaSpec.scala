@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.operators.Multimodal.UnitHashes
 
 /** Incremental media curation + lineage + the decode-derived
   * 'undecodable' reason: frozen-history reuse, same-id exclusion,
@@ -37,8 +38,8 @@ class IncrementalMediaSpec extends SparkSpec {
     val out = Multimodal.incrementalMediaCurationReport(
       nw, "id", "payload", oldRep,
       Multimodal.imageHashIndex(old, "id", "payload"),
-      Multimodal.videoFrameHashIndex(old, "id", "payload", 1),
-      Multimodal.audioSegmentHashIndex(old, "id", "payload", 128))
+      Multimodal.setOverlapIndex(old, "id", "payload", UnitHashes.videoFrames(1)),
+      Multimodal.setOverlapIndex(old, "id", "payload", UnitHashes.audioSegments(128)))
       .collect()
     assert(out.length == 1)
     val r = out.head
@@ -58,8 +59,8 @@ class IncrementalMediaSpec extends SparkSpec {
     val out = Multimodal.incrementalMediaCurationReport(
       nw, "id", "payload", oldRep,
       Multimodal.imageHashIndex(old, "id", "payload"),
-      Multimodal.videoFrameHashIndex(old, "id", "payload", 1),
-      Multimodal.audioSegmentHashIndex(old, "id", "payload", 128))
+      Multimodal.setOverlapIndex(old, "id", "payload", UnitHashes.videoFrames(1)),
+      Multimodal.setOverlapIndex(old, "id", "payload", UnitHashes.audioSegments(128)))
       .collect().map(r => r.getLong(0) ->
         (r.getAs[String]("verdict"), r.getAs[Any]("dup_of"))).toMap
     // 10: only index match is old-10 → excluded → keep... BUT 10 and

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.operators.Multimodal.UnitHashes
 
 /** Shot-keyed frame sampling: representatives agree with the boundary
   * detector by construction, one fingerprint per scene regardless of
@@ -51,7 +52,7 @@ class ShotKeyedSpec extends SparkSpec {
       2L -> clip(Seq(4, 4, 4), b = 9),     // unrelated content
       3L -> "junk".getBytes("UTF-8"))
       .toDF("id", "payload")
-    val pairs = Multimodal.videoNearDupPairsShotKeyed(docs, "id", "payload")
+    val pairs = Multimodal.setOverlapPairs(docs, "id", "payload", UnitHashes.videoShots())
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(3))).toSet
     assert(pairs == Set((0L, 1L, 1.0)), s"got $pairs")
   }
